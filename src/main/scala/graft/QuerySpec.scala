@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** One verifiable unit of engine capability: a Spark query over the test
   * corpus plus (when SQL-expressible) an equivalent ANSI-SQL oracle the
@@ -14,19 +15,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QuerySpec(
     name: String,
     doc: String,
-    run: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String],
+    order: Seq[Column] = Nil,
     benchRun: Option[(SparkSession, String) => DataFrame] = None,
     prepare: Option[(SparkSession, String) => Unit] = None) {
 
-  /** Production-mode plan: what a real pipeline would run at 100 TB — no
-    * oracle-only total ORDER BY, sketches instead of exact percentiles,
-    * row-hash dedup instead of full-width distinct. Falls back to `run`
-    * when the oracle plan already IS the production plan (post-agg sorts
-    * on ≤100-row outputs cost nothing). Benched by [[graft.Bench]]. */
-  def production: (SparkSession, String) => DataFrame = benchRun.getOrElse(run)
+  /** Oracle-checked plan: `body`, plus the declared [[oracleOrder]] as a
+    * trailing total ORDER BY when one is declared. Run by [[graft.Verify]]
+    * and compared row-by-row against the oracle. */
+  def run: (SparkSession, String) => DataFrame =
+    if (order.isEmpty) body else (s, d) => body(s, d).orderBy(order: _*)
 
-  /** Attach a production-mode variant (see [[production]]). */
+  /** Production-mode plan: what a real pipeline would run at 100 TB — the
+    * body without the oracle-only ORDER BY, or a [[withBench]] variant.
+    * Returns the registered function itself (not a wrapper), so callers can
+    * attribute it to the module that defines it. Benched by [[graft.Bench]]. */
+  def production: (SparkSession, String) => DataFrame = benchRun.getOrElse(body)
+
+  /** Declare the total ORDER BY the oracle compare needs. It is applied
+    * only by [[run]]: a table-sized output written unsorted in production
+    * must not pay a global sort that exists only for a deterministic
+    * row-ordered compare. Group-sized outputs keep their sort in `body`
+    * (it costs nothing there). */
+  def oracleOrder(cols: Column*): QuerySpec = copy(order = cols)
+
+  def oracleOrder(first: String, rest: String*): QuerySpec =
+    oracleOrder((first +: rest).map(col): _*)
+
+  /** Attach a production-mode variant that changes SEMANTICS, not just
+    * ordering: sketches instead of exact percentiles, xxhash64 instead of
+    * md5 draws, row-hash dedup instead of full-width distinct. A variant
+    * that only drops the oracle sort is an [[oracleOrder]] instead. */
   def withBench(fn: (SparkSession, String) => DataFrame): QuerySpec =
     copy(benchRun = Some(fn))
 
@@ -42,12 +62,12 @@ final case class QuerySpec(
 
 object QuerySpec {
   def sql(name: String, doc: String, oracle: String)(
-      run: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, doc, run, Some(oracle))
+      body: (SparkSession, String) => DataFrame): QuerySpec =
+    QuerySpec(name, doc, body, Some(oracle))
 
   /** Non-SQL-expressible op: the driver records a weaker rows-only check;
     * correctness is pinned by a ScalaTest spec instead. */
   def rowsOnly(name: String, doc: String)(
-      run: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, doc, run, None)
+      body: (SparkSession, String) => DataFrame): QuerySpec =
+    QuerySpec(name, doc, body, None)
 }

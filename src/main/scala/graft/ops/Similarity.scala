@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`) — north-star
   * component (SURVEY.md §7.6). All scoring is pure Catalyst higher-order
-  * array expressions (zip_with/transform/aggregate): codegen'd, no UDFs,
-  * no driver round-trips.
+  * array expressions (zip_with/transform/aggregate): no UDFs, no driver
+  * round-trips. These expressions are CodegenFallback in Spark 4.1 — they
+  * run interpreted, element by element, inside the generated stage; the
+  * native-codegen exception is `graft_cosine` ([[graft.expressions.CosineSimilarity]]).
   *
   * Scale design:
   *  - Brute-force top-k = broadcast the query vector, score every row

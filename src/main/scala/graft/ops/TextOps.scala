@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Text analysis for training-data pipelines — token statistics, quality
   * scoring, heuristic language ID, winnowing fingerprints (north-star —
   * SURVEY.md §7.6). Everything is Catalyst array/string expressions:
-  * codegen'd, map-side, zero UDFs and zero shuffles until the caller
-  * aggregates.
+  * map-side, zero UDFs and zero shuffles until the caller aggregates.
+  * The higher-order ones (transform over character shingles and
+  * winnowing windows) are CodegenFallback in Spark 4.1 and run
+  * interpreted inside the generated stage.
   *
   * Portability note: fingerprints hash with md5 (identical hex output in
   * Spark and DuckDB) so the oracle can reproduce them; xxhash64 would be

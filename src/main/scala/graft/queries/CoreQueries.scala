@@ -123,14 +123,8 @@ object CoreQueries {
       (s, d) =>
         Cleaning.applyRules(Tables.lineitem(s, d), cleanRules)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-          .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-            "l_discount", "l_tax")
-    }.withBench { (s, d) =>
-      // production: cleaned data is written unsorted (the total ORDER BY
-      // exists only for oracle determinism — a 100 TB global sort killer)
-      Cleaning.applyRules(Tables.lineitem(s, d), cleanRules)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    },
+    }.oracleOrder("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+      "l_discount", "l_tax"),
 
     sql("p2_iqr_filter",
       "P2: two-pass IQR outlier removal, exact percentile (oracle mode)",
@@ -165,15 +159,7 @@ object CoreQueries {
           col("l_quantity").cast("float").as("quantity"),
           col("l_extendedprice").cast("float").as("price"),
           col("l_returnflag").as("return_flag"))
-          .orderBy("order_id", "line_no", "quantity", "price", "return_flag")
-    }.withBench { (s, d) =>
-      Tables.lineitem(s, d).select(
-        col("l_orderkey").as("order_id"),
-        col("l_linenumber").cast("int").as("line_no"),
-        col("l_quantity").cast("float").as("quantity"),
-        col("l_extendedprice").cast("float").as("price"),
-        col("l_returnflag").as("return_flag"))
-    },
+    }.oracleOrder("order_id", "line_no", "quantity", "price", "return_flag"),
 
     sql("d1_bucket_features",
       "D1–D3: left-closed bucketing + guarded division + guarded percentage",
@@ -187,15 +173,7 @@ object CoreQueries {
           bucket.as("quantity_bucket"),
           Features.guardedDiv(col("l_extendedprice"), col("l_quantity")).as("price_per_unit"),
           Features.guardedPct(col("l_extendedprice") * col("l_discount"), col("l_extendedprice")).as("discount_pct"))
-          .orderBy("l_orderkey", "l_linenumber", "quantity_bucket",
-            "price_per_unit", "discount_pct")
-    }.withBench { (s, d) =>
-      Tables.lineitem(s, d).select(
-        col("l_orderkey"), col("l_linenumber"),
-        bucket.as("quantity_bucket"),
-        Features.guardedDiv(col("l_extendedprice"), col("l_quantity")).as("price_per_unit"),
-        Features.guardedPct(col("l_extendedprice") * col("l_discount"), col("l_extendedprice")).as("discount_pct"))
-    },
+    }.oracleOrder("l_orderkey", "l_linenumber", "quantity_bucket", "price_per_unit", "discount_pct"),
 
     sql("p12_expectation_suite",
       "P6+: DECLARATIVE EXPECTATION SUITE evaluated in ONE pass — the reference DECLARES a Great-Expectations bounds suite (data_validator.py:20-34) but never evaluates it (dead code behind an absent GX context); here the same vocabulary (not_null / between / in_set / match_regex, with GX's `mostly` threshold and ignore-nulls value semantics) compiles onto a single conditional-sum aggregate: a 50-expectation suite over 100 TB costs exactly one scan, not one job per expectation. Pass flags are exact BIGINT arithmetic ((evaluated-violations)*1e6 >= mostly_ppm*evaluated) — no double division anywhere. The in_set expectation carries mostly=0.9 and FAILS on this corpus (~1/3 'R' rows), proving the threshold machinery is live",
@@ -477,23 +455,11 @@ object CoreQueries {
           upper(col("p_type")).as("u_type"),
           substring(col("p_name"), 1, 8).as("name_prefix"),
           // cast: Spark length() is INT, DuckDB LENGTH is BIGINT — typed hash
-        length(col("p_name")).cast("long").as("name_len"),
+          length(col("p_name")).cast("long").as("name_len"),
           abs(col("p_size") - 25).as("size_dist"),
           round(col("p_retailprice") * 1.1, 2).as("marked_up"),
           when(col("p_size") >= 25, "big").otherwise("small").as("size_class"),
           coalesce(expr("nullif(p_brand, 'Brand#1')"), lit("other")).as("brand_or_other"))
-          .orderBy("p_partkey")
-    }.withBench { (s, d) =>
-      Tables.part(s, d).select(
-        col("p_partkey"),
-        upper(col("p_type")).as("u_type"),
-        substring(col("p_name"), 1, 8).as("name_prefix"),
-        // cast: Spark length() is INT, DuckDB LENGTH is BIGINT — typed hash
-        length(col("p_name")).cast("long").as("name_len"),
-        abs(col("p_size") - 25).as("size_dist"),
-        round(col("p_retailprice") * 1.1, 2).as("marked_up"),
-        when(col("p_size") >= 25, "big").otherwise("small").as("size_class"),
-        coalesce(expr("nullif(p_brand, 'Brand#1')"), lit("other")).as("brand_or_other"))
-    }
+    }.oracleOrder("p_partkey")
   )
 }

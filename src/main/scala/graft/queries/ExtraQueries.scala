@@ -232,7 +232,7 @@ object ExtraQueries {
         | UNION ALL
         | SELECT -o_orderkey, o_custkey, 'I' FROM orders WHERE o_orderkey % 100 = 1)
         | ORDER BY o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         val base = Tables.orders(s, d)
           .select("o_orderkey", "o_custkey", "o_orderstatus")
         val changes =
@@ -249,28 +249,7 @@ object ExtraQueries {
             .withColumn("o_orderstatus", lit("I"))
             .withColumn("op", lit("upsert")).withColumn("seq", lit(1L)))
         graft.ops.Merge.applyChangeLog(base, changes, Seq("o_orderkey"))
-          .orderBy("o_orderkey")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the merged snapshot is table-sized — the
-      // trailing total ORDER BY exists only for the oracle hash compare
-      val base = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
-      val changes =
-        base.filter(col("o_orderkey") % 10 === 3)
-          .withColumn("o_orderstatus", lit("X"))
-          .withColumn("op", lit("upsert")).withColumn("seq", lit(1L))
-        .unionByName(base.filter(col("o_orderkey") % 10 === 3)
-          .withColumn("o_orderstatus", lit("U"))
-          .withColumn("op", lit("upsert")).withColumn("seq", lit(2L)))
-        .unionByName(base.filter(col("o_orderkey") % 10 === 7)
-          .withColumn("op", lit("delete")).withColumn("seq", lit(1L)))
-        .unionByName(base.filter(col("o_orderkey") % 100 === 1)
-          .withColumn("o_orderkey", -col("o_orderkey"))
-          .withColumn("o_orderstatus", lit("I"))
-          .withColumn("op", lit("upsert")).withColumn("seq", lit(1L)))
-      graft.ops.Merge.applyChangeLog(base, changes, Seq("o_orderkey"))
-    },
+    }.oracleOrder("o_orderkey"),
 
     sql("u15_versioned_delta",
       "U7++: delta-sized versioned snapshots — a full base snapshot plus a chain of two U8 CDC changelog versions (storage ∝ changes, not table size), resolved through Versioned.read. Exercises latest-seq-wins WITHIN a delta (superseded seq-1 'X') and version-order-wins ACROSS deltas (a later version's seq-1 overwrites an earlier version's seq-2); oracle replays the same deterministic key-class edits in SQL",
@@ -283,7 +262,7 @@ object ExtraQueries {
         | UNION ALL
         | SELECT -o_orderkey, o_custkey, 'I' FROM orders WHERE o_orderkey % 100 = 1)
         | ORDER BY o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // a real version-history round-trip, not an in-memory fold: base
         // lands as full v1, two changelogs land as delta v2/v3 (each
         // writes only its changed rows), and the read resolves
@@ -293,13 +272,8 @@ object ExtraQueries {
         // corpus dir (Bench's untimed prepare hook), so timed passes
         // measure the chain-resolving read this query exists to
         // exercise, not three table writes per pass.
-        graft.io.Versioned.read(s, ensureU15Table(s, d)).orderBy("o_orderkey")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the resolved snapshot is table-sized — the
-      // trailing total ORDER BY exists only for the oracle hash compare
-      graft.io.Versioned.read(s, ensureU15Table(s, d))
-    }.withPrepare((s, d) => { ensureU15Table(s, d); () }),
+        graft.io.Versioned.read(s, ensureU15Table(s, d))
+    }.oracleOrder("o_orderkey").withPrepare((s, d) => { ensureU15Table(s, d); () }),
 
 
     sql("u9_incremental_agg",
@@ -515,7 +489,7 @@ object ExtraQueries {
         |  (s - o_totalprice + 20.0 * gmean) / CAST(n - 1 + 20 AS DOUBLE) AS loo_encoding
         | FROM orders JOIN c ON o_orderpriority = cat CROSS JOIN g
         | ORDER BY o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         val W = org.apache.spark.sql.expressions.Window
         val Dec = org.apache.spark.sql.types.DecimalType(18, 4)
         val orders = Tables.orders(s, d)
@@ -533,28 +507,7 @@ object ExtraQueries {
           .select(col("o_orderkey"), col("o_orderpriority"),
             ((col("s") - col("o_totalprice") + lit(20.0) * col("gmean"))
               / (col("n") - 1 + 20).cast("double")).as("loo_encoding"))
-          .orderBy("o_orderkey")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): one row per order, encoded map-side against the
-      // broadcast 5-row cat sliver — the trailing total ORDER BY exists
-      // only for the oracle hash compare
-      val W = org.apache.spark.sql.expressions.Window
-      val Dec = org.apache.spark.sql.types.DecimalType(18, 4)
-      val orders = Tables.orders(s, d)
-      val cats = orders.groupBy(col("o_orderpriority").as("cat"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast(Dec)).cast("double").as("s"))
-      val w = W.partitionBy(lit(1))
-        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-      val withG = cats.withColumn("gmean",
-        sum(col("s").cast(Dec)).over(w).cast("double") /
-          sum(col("n")).over(w))
-      orders.join(withG, col("o_orderpriority") === col("cat"))
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          ((col("s") - col("o_totalprice") + lit(20.0) * col("gmean"))
-            / (col("n") - 1 + 20).cast("double")).as("loo_encoding"))
-    },
+    }.oracleOrder("o_orderkey"),
 
     sql("u19_kmv_overlap",
       "U19: KMV set-operation sketch — per-source bottom-256 shingle-hash states (value-keyed priorities, so slices may OVERLAP on values: merge dedups by (key, pri), at-least-once-safe) answer the cross-source distinct-overlap question the U11 distinct states cannot: for each source pair, the bottom-L of the two sketches' union is a uniform sample of the union of their shingle SETS and the both-present fraction estimates Jaccard (Beyer et al. SIGMOD'07); sets under k make the estimate exact. md5 priorities for the oracle, xxhash64 in production",
@@ -915,24 +868,12 @@ object ExtraQueries {
         |   COALESCE(strftime(LEAD(eff) OVER (PARTITION BY c_custkey ORDER BY eff), '%Y-%m-%d'), '(current)') AS valid_to_s,
         |   LEAD(eff) OVER (PARTITION BY c_custkey ORDER BY eff) IS NULL AS is_current
         | FROM chg ORDER BY c_custkey, valid_from_s""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val scd = scd2Dimension(s, d)
-        scd.select(col("c_custkey"), col("segment"),
+      (s, d) =>
+        scd2Dimension(s, d).select(col("c_custkey"), col("segment"),
             date_format(col("valid_from"), "yyyy-MM-dd").as("valid_from_s"),
             coalesce(date_format(col("valid_to"), "yyyy-MM-dd"), lit("(current)")).as("valid_to_s"),
             col("is_current"))
-          .orderBy("c_custkey", "valid_from_s")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the interval table is dimension-sized (every
-      // customer version) — the trailing total ORDER BY exists only for
-      // the oracle hash compare; the changelog window's own per-key sort
-      // is unchanged
-      scd2Dimension(s, d).select(col("c_custkey"), col("segment"),
-          date_format(col("valid_from"), "yyyy-MM-dd").as("valid_from_s"),
-          coalesce(date_format(col("valid_to"), "yyyy-MM-dd"), lit("(current)")).as("valid_to_s"),
-          col("is_current"))
-    },
+    }.oracleOrder("c_custkey", "valid_from_s"),
 
     sql("o10_domain_mixture",
       "O10: training-mixture composer — per-source quotas (curated src0-src4 get 15 docs, crawl-tier sources 5), deterministic hash-order row_number; the doc-level mixture step before shard packaging",
@@ -1131,7 +1072,7 @@ object ExtraQueries {
         | CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END AS status_f
         | FROM lineitem
         | ORDER BY l_orderkey, l_linenumber, flag_a, flag_n, flag_r, status_f""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // explicit category values (like a17's PIVOT) — a distinct-scan to
         // discover them would be an extra pass and a nondeterministic
         // column order; real pipelines pin the vocabulary anyway
@@ -1142,21 +1083,7 @@ object ExtraQueries {
           ind("l_returnflag", "N").as("flag_n"),
           ind("l_returnflag", "R").as("flag_r"),
           ind("l_linestatus", "F").as("status_f"))
-          .orderBy("l_orderkey", "l_linenumber", "flag_a", "flag_n", "flag_r",
-            "status_f")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): one row per lineitem — the encode is pure
-      // map-side; the trailing total ORDER BY (a full-table sort) exists
-      // only for the oracle hash compare
-      def ind(c: String, v: String) = when(col(c) === v, 1).otherwise(0)
-      Tables.lineitem(s, d).select(
-        col("l_orderkey"), col("l_linenumber"),
-        ind("l_returnflag", "A").as("flag_a"),
-        ind("l_returnflag", "N").as("flag_n"),
-        ind("l_returnflag", "R").as("flag_r"),
-        ind("l_linestatus", "F").as("status_f"))
-    },
+    }.oracleOrder("l_orderkey", "l_linenumber", "flag_a", "flag_n", "flag_r", "status_f"),
 
     sql("o11_train_val_test",
       "O11: deterministic train/val/test split — hex-prefix of md5(doc_id) against lexicographic cut points (~90/5/5); reproducible across runs, engines, partitionings; per-split-per-source counts",
@@ -1483,15 +1410,7 @@ object ExtraQueries {
           .na.drop(Seq("user_id"))
           .na.fill(0.0, Seq("value"))
           .select(col("event_id"), col("user_id"), col("value").as("value_filled"))
-          .orderBy("event_id")
-    }.withBench { (s, d) =>
-      // production (r19): pure map-side filter+fill over every event —
-      // the trailing total ORDER BY exists only for the oracle hash compare
-      Tables.events(s, d)
-        .na.drop(Seq("user_id"))
-        .na.fill(0.0, Seq("value"))
-        .select(col("event_id"), col("user_id"), col("value").as("value_filled"))
-    },
+    }.oracleOrder("event_id"),
 
     sql("p8_salted_agg",
       "Skew: two-phase salted aggregation — (key,salt) partial then key final; identical to the direct GROUP BY (the skewed-reduce-key escape hatch when map-side partials can't save you)",
@@ -1586,7 +1505,7 @@ object ExtraQueries {
         | c_name, c_acctbal, c_mktsegment
         | FROM orders JOIN customer ON o_custkey = c_custkey
         | ORDER BY o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // day-0 build: a0⋈b0; day-1 folds ΔA=a1 (new orders); day-2 folds
         // ΔA=a2 and ΔB=b1 (new customers) in one increment — at 100 TB
         // each fold shuffles only the batch, the archive is scanned
@@ -1607,28 +1526,7 @@ object ExtraQueries {
         v2.select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderpriority"),
             col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-          .orderBy("o_orderkey")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the maintained view is table-sized — the
-      // trailing total ORDER BY exists only for the oracle hash compare
-      val a = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), col("o_orderpriority"))
-      val b = Tables.customer(s, d).select(
-        col("c_custkey").as("o_custkey"), col("c_name"),
-        col("c_acctbal"), col("c_mktsegment"))
-      val Seq(a0, a1, a2) =
-        (0 to 2).map(i => a.filter(col("o_orderkey") % 3 === i))
-      val b0 = b.filter(col("o_custkey") % 2 === 0)
-      val b1 = b.filter(col("o_custkey") % 2 =!= 0)
-      val v0 = a0.join(b0, Seq("o_custkey"))
-      val v1 = graft.ops.Ivm.maintainJoinView(v0, a0, a1, b0, b0.limit(0), Seq("o_custkey"))
-      val v2 = graft.ops.Ivm.maintainJoinView(v1, a0.unionByName(a1), a2, b0, b1, Seq("o_custkey"))
-      v2.select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), col("o_orderpriority"),
-          col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    },
+    }.oracleOrder("o_orderkey"),
 
     sql("u22_cms_estimate",
       "U22: mergeable COUNT-MIN sketch state — point frequency estimates for ANY value from a fixed depth×width counter grid per key (state ∝ grid, not vocabulary; merge = cell addition across row-disjoint slices); estimates NEVER undercount and both engines compute identical md5-window positions so even collision-inflated values hash-match; the per-source token-frequency monitor at 100 TB",

@@ -28,24 +28,6 @@ object JoinQueries {
   private def revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val revenueSql = "l_extendedprice * (1.0 - l_discount)"
 
-  /** j2: aggregate lineitem per key BEFORE the join (Catalyst won't push
-    * aggregation through an outer join itself) — the join then moves one
-    * pre-aggregated row per order instead of every line: 4× fewer rows
-    * and a fraction of the width through the shuffle, the difference
-    * between shuffling 100 TB and shuffling the group summary at scale.
-    * Semantics identical: missing orders surface count 0 / sum 0.0. */
-  private def j2Plan(s: org.apache.spark.sql.SparkSession, d: String) = {
-    // widened (r19): the per-order partial agg (one group per order) is
-    // the heavy map stage and ran single-task on the one-row-group scan
-    val lineAgg = Tables.widened(s, d, "lineitem").groupBy("l_orderkey")
-      .agg(count(lit(1)).as("agg_n"), dsum(col("l_quantity")).as("agg_q"))
-    Tables.orders(s, d)
-      .join(lineAgg, col("o_orderkey") === col("l_orderkey"), "left")
-      .select(col("o_orderkey"),
-        coalesce(col("agg_n"), lit(0L)).as("n_lines"),
-        coalesce(col("agg_q"), lit(0.0)).as("sum_quantity"))
-  }
-
   val all: Seq[QuerySpec] = Seq(
 
     sql("j1_star_agg",
@@ -81,8 +63,23 @@ object JoinQueries {
          | COALESCE(${ssum("l_quantity")}, 0.0) AS sum_quantity
          | FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
          | GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => j2Plan(s, d).orderBy("o_orderkey")
-    }.withBench { (s, d) => j2Plan(s, d) },
+      (s, d) =>
+        // aggregate lineitem per key BEFORE the join (Catalyst won't push
+        // aggregation through an outer join itself) — the join then moves one
+        // pre-aggregated row per order instead of every line: 4× fewer rows
+        // and a fraction of the width through the shuffle, the difference
+        // between shuffling 100 TB and shuffling the group summary at scale.
+        // Semantics identical: missing orders surface count 0 / sum 0.0.
+        // widened (r19): the per-order partial agg (one group per order) is
+        // the heavy map stage and ran single-task on the one-row-group scan
+        val lineAgg = Tables.widened(s, d, "lineitem").groupBy("l_orderkey")
+          .agg(count(lit(1)).as("agg_n"), dsum(col("l_quantity")).as("agg_q"))
+        Tables.orders(s, d)
+          .join(lineAgg, col("o_orderkey") === col("l_orderkey"), "left")
+          .select(col("o_orderkey"),
+            coalesce(col("agg_n"), lit(0L)).as("n_lines"),
+            coalesce(col("agg_q"), lit(0.0)).as("sum_quantity"))
+    }.oracleOrder("o_orderkey"),
 
     sql("j3_semi_join",
       "J1: left-semi join — orders having at least one max-quantity line (no fact-side duplication)",
@@ -96,16 +93,7 @@ object JoinQueries {
             Tables.lineitem(s, d).filter(col("l_quantity") >= 48),
             col("o_orderkey") === col("l_orderkey"), "left_semi")
           .select("o_orderkey", "o_totalprice")
-          .orderBy("o_orderkey")
-    }.withBench { (s, d) =>
-      // production (r19): table-sized output (~5% of orders) — the
-      // trailing total ORDER BY exists only for the oracle hash compare
-      Tables.orders(s, d)
-        .join(
-          Tables.lineitem(s, d).filter(col("l_quantity") >= 48),
-          col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select("o_orderkey", "o_totalprice")
-    },
+    }.oracleOrder("o_orderkey"),
 
     sql("j4_anti_join",
       "J1: left-anti join — orders with no lineitems at all",
@@ -129,7 +117,7 @@ object JoinQueries {
         |       strftime(c.cts, '%Y-%m-%d %H:%M:%S') AS last_click_ts
         | FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.pts >= c.cts
         | ORDER BY p.event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // second-truncated on BOTH sides: Spark stores micros, the oracle
         // nanos — truncation makes the boundary comparison identical
         val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
@@ -141,22 +129,7 @@ object JoinQueries {
           .select(col("event_id"), col("user_id"),
             date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
             date_format(col("asof"), "yyyy-MM-dd HH:mm:ss").as("last_click_ts"))
-          .orderBy("event_id")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): one row per purchase (table-sized) — the
-      // trailing total ORDER BY exists only for the oracle hash compare;
-      // the as-of union-window's own per-user sort is the real work
-      val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("pts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), date_trunc("second", col("ts")).as("cts"))
-      graft.ops.AsOf.asofBackward(p, c, "user_id", "pts", "cts", "asof")
-        .select(col("event_id"), col("user_id"),
-          date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
-          date_format(col("asof"), "yyyy-MM-dd HH:mm:ss").as("last_click_ts"))
-    },
+    }.oracleOrder("event_id"),
 
     sql("j12_asof_forward",
       "J1+: FORWARD as-of join with tolerance — next purchase at or after each click, nulled past 2 h (time-to-convert; pandas merge_asof direction='forward'). Same one-union one-window plan as j6, mirrored to look ahead; tolerance on exact epoch-second arithmetic",
@@ -173,7 +146,7 @@ object JoinQueries {
         |  strftime(CASE WHEN date_diff('second', t, nxt) <= 7200 THEN nxt END,
         |           '%Y-%m-%d %H:%M:%S') AS next_purchase_ts
         | FROM f WHERE side = 0 ORDER BY event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // second-truncated on both sides (the j6 discipline) so the
         // inclusive >= boundary and the tolerance edge are identical in
         // both engines
@@ -188,23 +161,7 @@ object JoinQueries {
           .select(col("event_id"), col("user_id"),
             date_format(col("cts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
             date_format(col("nxt"), "yyyy-MM-dd HH:mm:ss").as("next_purchase_ts"))
-          .orderBy("event_id")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): one row per click (table-sized) — the trailing
-      // total ORDER BY exists only for the oracle hash compare
-      val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          date_trunc("second", col("ts")).as("cts"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), date_trunc("second", col("ts")).as("pts"))
-      graft.ops.AsOf.asofForward(c, p, "user_id", "cts", "pts", "nxt",
-        toleranceSeconds = Some(7200L))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("cts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
-          date_format(col("nxt"), "yyyy-MM-dd HH:mm:ss").as("next_purchase_ts"))
-    },
+    }.oracleOrder("event_id"),
 
     sql("j13_asof_nearest",
       "J1+: NEAREST as-of join — each signup's closest click in absolute time within the user (pandas direction='nearest'; one backward + one forward window pass, exact ties prefer backward). Oracle mirrors both passes and the tie rule in integer-second arithmetic",
@@ -230,7 +187,7 @@ object JoinQueries {
         |    ELSE bk END, '%Y-%m-%d %H:%M:%S') AS nearest_click_ts
         | FROM s JOIN b USING (event_id) JOIN f USING (event_id)
         | ORDER BY event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
         val su = ev.filter(col("event_type") === "signup")
           .select(col("event_id"), col("user_id"),
@@ -241,22 +198,7 @@ object JoinQueries {
           .select(col("event_id"), col("user_id"),
             date_format(col("t"), "yyyy-MM-dd HH:mm:ss").as("signup_ts"),
             date_format(col("nearest"), "yyyy-MM-dd HH:mm:ss").as("nearest_click_ts"))
-          .orderBy("event_id")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): one row per signup (table-sized) — the trailing
-      // total ORDER BY exists only for the oracle hash compare
-      val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
-      val su = ev.filter(col("event_type") === "signup")
-        .select(col("event_id"), col("user_id"),
-          date_trunc("second", col("ts")).as("t"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), date_trunc("second", col("ts")).as("ct"))
-      graft.ops.AsOf.asofNearest(su, c, "user_id", "t", "ct", "nearest")
-        .select(col("event_id"), col("user_id"),
-          date_format(col("t"), "yyyy-MM-dd HH:mm:ss").as("signup_ts"),
-          date_format(col("nearest"), "yyyy-MM-dd HH:mm:ss").as("nearest_click_ts"))
-    },
+    }.oracleOrder("event_id"),
 
     sql("j8_range_join",
       "J1+: point-in-interval range join — order prices vs per-priority price bands (grid-bucketized production plan)",

@@ -237,11 +237,7 @@ object LlmPipelineQueries {
         | FROM s ORDER BY doc_id, chunk_id""".stripMargin.replace("\n", "")) {
       (s, d) =>
         graft.ops.Packing.chunkByTokens(Tables.documents(s, d), size = 40, stride = 32)
-          .orderBy("doc_id", "chunk_id")
-    }.withBench { (s, d) =>
-      // production: same narrow plan minus the oracle-only total sort
-      graft.ops.Packing.chunkByTokens(Tables.documents(s, d), size = 40, stride = 32)
-    },
+    }.oracleOrder("doc_id", "chunk_id"),
 
     sql("llm7_temperature_mixture",
       "LLM pipeline: temperature-scaled source mixture — sample source s ∝ n_s^0.5 (the standard low-resource upsampling rule), 200-doc budget, ≥1 doc floor per source; per-source weights floor(sqrt(n)·1e6) so quota arithmetic is pure 64-bit integer (engine-reproducible), md5 hash-order draw",

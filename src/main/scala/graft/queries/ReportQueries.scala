@@ -11,38 +11,6 @@ import graft.QuerySpec.sql
   */
 object ReportQueries {
 
-  /** ep8's computation minus the oracle-only total sort (run = core +
-    * ORDER BY, production = core — the w-family discipline). */
-  private def ep8core(s: org.apache.spark.sql.SparkSession,
-                      d: String): org.apache.spark.sql.DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val e = graft.model.Tables.events(s, d)
-      .filter(col("user_id") % 10 === 0)
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .withColumn("h", date_trunc("hour", col("ts")))
-    // one observation per (user, hour): the hour's LAST event wins,
-    // deterministically under the (ts, event_id) total order
-    val wHour = W.partitionBy("user_id", "h")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val obs = e.withColumn("rn", row_number().over(wHour))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("h"), col("value"), lit(true).as("obs"))
-    // per-user hourly grid over the user's own span — sequence() is
-    // per-row compute, so grid size scales with keys × span, never a
-    // cross join against a global calendar
-    val grid = e.groupBy("user_id")
-      .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      .select(col("user_id"),
-        explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
-    val wLocf = W.partitionBy("user_id").orderBy("h")
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    grid.join(obs, Seq("user_id", "h"), "left")
-      .select(col("user_id"),
-        date_format(col("h"), "yyyy-MM-dd HH").as("hour_s"),
-        last(col("value"), ignoreNulls = true).over(wLocf).as("value_locf"),
-        coalesce(col("obs"), lit(false)).as("is_observed"))
-  }
-
   val all: Seq[QuerySpec] = Seq(
 
     sql("ep2_analysis",
@@ -202,13 +170,7 @@ object ReportQueries {
       (s, d) =>
         graft.ops.Funnel.sessionize(
           graft.model.Tables.events(s, d), gapMicros = 1800L * 1000000L)
-          .orderBy("user_id", "session_seq")
-    }.withBench { (s, d) =>
-      // production (r19): session table written unsorted — the trailing
-      // total ORDER BY exists only for the oracle hash compare
-      graft.ops.Funnel.sessionize(
-        graft.model.Tables.events(s, d), gapMicros = 1800L * 1000000L)
-    },
+    }.oracleOrder("user_id", "session_seq"),
 
     sql("ep8_resample_locf",
       "EP8: time-series resampling — irregular per-user events land on a regular hourly grid (sequence + explode per user, bounded by the user's own span) with last-observation-carried-forward interpolation over the gaps (last(_, ignoreNulls) running window); the align-sensor-streams-before-joining primitive. Values pass through untouched (no arithmetic), so the oracle matches exactly; user sliver %10 keeps the grid verify-sized",
@@ -226,13 +188,34 @@ object ReportQueries {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf,
         |  is_observed
         | FROM j ORDER BY user_id, hour_s""".stripMargin.replace("\n", "")) {
-      (s, d) => ep8core(s, d).orderBy("user_id", "hour_s")
-    }.withBench { (s, d) =>
-      // production (r19): the resampled grid feeds the next pipeline
-      // stage unsorted — the total ORDER BY is oracle-only; the LOCF
-      // window's own per-user sort is unchanged
-      ep8core(s, d)
-    },
+      (s, d) =>
+        val W = org.apache.spark.sql.expressions.Window
+        val e = graft.model.Tables.events(s, d)
+          .filter(col("user_id") % 10 === 0)
+          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+          .withColumn("h", date_trunc("hour", col("ts")))
+        // one observation per (user, hour): the hour's LAST event wins,
+        // deterministically under the (ts, event_id) total order
+        val wHour = W.partitionBy("user_id", "h")
+          .orderBy(col("ts").desc, col("event_id").desc)
+        val obs = e.withColumn("rn", row_number().over(wHour))
+          .filter(col("rn") === 1)
+          .select(col("user_id"), col("h"), col("value"), lit(true).as("obs"))
+        // per-user hourly grid over the user's own span — sequence() is
+        // per-row compute, so grid size scales with keys × span, never a
+        // cross join against a global calendar
+        val grid = e.groupBy("user_id")
+          .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
+          .select(col("user_id"),
+            explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
+        val wLocf = W.partitionBy("user_id").orderBy("h")
+          .rowsBetween(W.unboundedPreceding, W.currentRow)
+        grid.join(obs, Seq("user_id", "h"), "left")
+          .select(col("user_id"),
+            date_format(col("h"), "yyyy-MM-dd HH").as("hour_s"),
+            last(col("value"), ignoreNulls = true).over(wLocf).as("value_locf"),
+            coalesce(col("obs"), lit(false)).as("is_observed"))
+    }.oracleOrder("user_id", "hour_s"),
 
     sql("ep9_rolling_anomaly",
       "EP9: rolling z-score anomaly detection — each hour's event count scored against its trailing-24-observed-hours baseline (ROWS 24 PRECEDING..1 PRECEDING, the point under test excluded); z is derived from INTEGER power sums through a fixed IEEE shape ((x − s1/24) / (sqrt(24·s2 − s1²)/24) — every step correctly-rounded, bit-portable), |z| > 3 flags. The bad-ingest/traffic-spike monitor; the global window runs over the HOURLY AGG SLIVER (metadata-scale even at 100 TB of events), never the event stream",

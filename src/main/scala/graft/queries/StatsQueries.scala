@@ -60,7 +60,7 @@ object StatsQueries {
         |  CAST(common AS DOUBLE) / CAST(d1.deg + d2.deg - common AS DOUBLE) AS jaccard
         | FROM fresh JOIN deg d1 ON id1 = d1.id JOIN deg d2 ON id2 = d2.id
         | ORDER BY id1, id2""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         // same corpus-scale step as g2 (the co-order pair graph); the
         // prediction runs on the edge sliver
         // widened (r19): the distinct's partial agg — the one
@@ -73,21 +73,7 @@ object StatsQueries {
           .agg(count(lit(1)).as("support"))
           .filter(col("support") >= 2)
         graft.ops.Graph.linkCandidates(pairs)
-          .orderBy("id1", "id2")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the prediction list is edge-sliver×wedge-sized
-      // (~131k rows at sf0.1) — the trailing total ORDER BY exists only
-      // for the oracle hash compare
-      val lp = Tables.widened(s, d, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = lp.join(lp.select(col("ok"), col("pk").as("pk2")), Seq("ok"))
-        .filter(col("pk") < col("pk2"))
-        .groupBy(col("pk").as("id1"), col("pk2").as("id2"))
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
-      graft.ops.Graph.linkCandidates(pairs)
-    },
+    }.oracleOrder("id1", "id2"),
 
     sql("a25_benford_audit",
       "A25: BENFORD first-digit audit — leading digits of order totals vs the Benford expectation (hard-coded log10(1+1/d) ppm constants, summing to exactly 10⁶), per-digit chi-square contributions through the a23 fixed-IEEE shape. The fabricated-data / broken-generator detector; the first digit comes from integer-string slicing of FLOOR(x) — no log10, whose last-ulp behavior differs between engines. All 9 digits always present (zero-count digits included via the expectation side)",

@@ -23,13 +23,7 @@ object StreamingQueries {
         | GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin.replace("\n", "")) {
       (s, d) =>
         EventStreams.tumblingCounts(Tables.events(s, d))
-          .orderBy("window_start", "event_type")
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.tumblingCounts(Tables.events(s, d))
-    },
+    }.oracleOrder("window_start", "event_type"),
 
     sql("st2_session_window",
       "Streaming: per-user 5-minute-gap sessionization via session_window (batch = stream)",
@@ -47,13 +41,7 @@ object StreamingQueries {
         | ORDER BY user_id, session_start""".stripMargin.replace("\n", "")) {
       (s, d) =>
         EventStreams.userSessions(Tables.events(s, d))
-          .orderBy("user_id", "session_start")
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.userSessions(Tables.events(s, d))
-    },
+    }.oracleOrder("user_id", "session_start"),
 
     sql("st5_enriched_segments",
       "Streaming: stream-static enrichment — events ⋈ broadcast customer-segment dim, then 1h windowed counts per segment (batch = stream)",
@@ -68,17 +56,7 @@ object StreamingQueries {
           Tables.customer(s, d)
             .select(org.apache.spark.sql.functions.col("c_custkey").as("user_id"),
               org.apache.spark.sql.functions.col("c_mktsegment").as("segment")))
-          .orderBy("window_start", "segment")
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.enrichedSegmentCounts(
-        Tables.events(s, d),
-        Tables.customer(s, d)
-          .select(org.apache.spark.sql.functions.col("c_custkey").as("user_id"),
-            org.apache.spark.sql.functions.col("c_mktsegment").as("segment")))
-    },
+    }.oracleOrder("window_start", "segment"),
 
     sql("st4_sliding_window",
       "Streaming: sliding 1h windows hopping every 15min (4 overlapping windows per event; batch = stream)",
@@ -94,13 +72,7 @@ object StreamingQueries {
       // time_bucket(15min, ts) minus 0..3 slides, exactly
       (s, d) =>
         EventStreams.slidingCounts(Tables.events(s, d))
-          .orderBy("window_start", "event_type")
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.slidingCounts(Tables.events(s, d))
-    },
+    }.oracleOrder("window_start", "event_type"),
 
     sql("st3_stream_join",
       "Streaming: stream-stream click->purchase attribution join (equality key + event-time range, both sides watermarked; batch = stream)",
@@ -113,17 +85,9 @@ object StreamingQueries {
         |  AND date_trunc('second', p.ts) <= date_trunc('second', c.ts) + INTERVAL 60 MINUTE
         | WHERE c.event_type = 'click' AND p.event_type = 'purchase' AND c.user_id IS NOT NULL
         | ORDER BY click_id, purchase_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        EventStreams.clickPurchaseJoin(ev, Tables.events(s, d))
-          .orderBy("click_id", "purchase_id")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.clickPurchaseJoin(Tables.events(s, d), Tables.events(s, d))
-    },
+      (s, d) =>
+        EventStreams.clickPurchaseJoin(Tables.events(s, d), Tables.events(s, d))
+    }.oracleOrder("click_id", "purchase_id"),
 
     sql("st6_stream_left_join",
       "Streaming: stream-stream LEFT OUTER click->purchase join — every click appears, unconverted ones null-completed (the abandoned-journeys view an inner join drops); null rows emit once the watermark closes the click's horizon. Batch = stream (StreamingSpec pins the replay with a watermark-advancing sentinel)",
@@ -136,17 +100,9 @@ object StreamingQueries {
         |  AND date_trunc('second', p.ts) <= date_trunc('second', c.ts) + INTERVAL 60 MINUTE
         | WHERE c.event_type = 'click' AND c.user_id IS NOT NULL
         | ORDER BY click_id, purchase_id NULLS FIRST""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        EventStreams.clickPurchaseJoinOuter(ev, Tables.events(s, d))
-          .orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.clickPurchaseJoinOuter(Tables.events(s, d), Tables.events(s, d))
-    },
+      (s, d) =>
+        EventStreams.clickPurchaseJoinOuter(Tables.events(s, d), Tables.events(s, d))
+    }.oracleOrder(col("click_id"), col("purchase_id").asc_nulls_first),
 
     sql("st8_stream_full_join",
       "Streaming: stream-stream FULL OUTER click->purchase join — the complete funnel ledger: matched attributions + unconverted clicks (null purchase side) + unattributed organic purchases (null click side, the class both one-sided joins drop). Null-completed rows emit when the opposite watermark closes their horizon. Batch = stream (StreamingSpec replay with dual-sided sentinel)",
@@ -162,18 +118,9 @@ object StreamingQueries {
         |  ON c.user_id = p.p_user_id
         |  AND p.pts >= c.cts AND p.pts <= c.cts + INTERVAL 60 MINUTE
         | ORDER BY user_id, click_id NULLS FIRST, purchase_id NULLS FIRST""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        EventStreams.clickPurchaseJoinFull(ev, Tables.events(s, d))
-          .orderBy(col("user_id"), col("click_id").asc_nulls_first,
-            col("purchase_id").asc_nulls_first)
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.clickPurchaseJoinFull(Tables.events(s, d), Tables.events(s, d))
-    },
+      (s, d) =>
+        EventStreams.clickPurchaseJoinFull(Tables.events(s, d), Tables.events(s, d))
+    }.oracleOrder(col("user_id"), col("click_id").asc_nulls_first, col("purchase_id").asc_nulls_first),
 
     sql("st7_session_attribution",
       "Streaming COMPOSITION: the st6 left-outer click->purchase attribution join feeding the st2 session-window aggregation — per 5-min-gap click session, attributed pairs vs unconverted clicks (the funnel-dashboard serving shape; two chained stateful operators on a stream). Batch = stream (StreamingSpec pins the replay behind the admission guard with a watermark sentinel)",
@@ -201,17 +148,9 @@ object StreamingQueries {
       // session and aggregate. session_window over the join output sees
       // the same click-ts set (duplicated click_ts rows don't move
       // session boundaries), so boundaries agree by construction.
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        EventStreams.sessionAttribution(ev, Tables.events(s, d))
-          .orderBy("user_id", "session_start")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): the batch twin's trailing total ORDER BY exists
-      // only for the oracle hash compare — table-sized output, w-family
-      // discipline (OPTIMIZATION_r18 change 13)
-      EventStreams.sessionAttribution(Tables.events(s, d), Tables.events(s, d))
-    },
+      (s, d) =>
+        EventStreams.sessionAttribution(Tables.events(s, d), Tables.events(s, d))
+    }.oracleOrder("user_id", "session_start"),
 
     sql("st9_custom_state_tws",
       "Streaming: CUSTOM KEYED STATE via transformWithState — Spark 4's arbitrary-state API (named ValueState handles + TTL + timers, the successor to flatMapGroupsWithState) running per-user running totals. Money as cent-BIGINTs (ROUND before the cast) so the running sum is exact integer arithmetic — order-independent across micro-batch replays and engine-portable. Batch mode processes each key's rows in ONE handleInputRows call, so the emission IS the final aggregate the DuckDB oracle computes; the stream==batch and RocksDB-parity pins live in RocksDbParitySpec alongside the flatMapGroupsWithState twin",

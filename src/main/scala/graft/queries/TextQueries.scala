@@ -418,7 +418,7 @@ object TextQueries {
          |   '${graft.ops.Pii.ssnPattern}', '<SSN>', 'g'),
          |   '${graft.ops.Pii.ipv4Pattern}', '<IP>', 'g') AS redacted
          | FROM aug ORDER BY doc_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
         import graft.ops.Pii
         val aug = concat(
           col("text"),
@@ -438,32 +438,7 @@ object TextQueries {
             Pii.countMatches(col("t"), Pii.ipv4Pattern).as("n_ips"),
             Pii.countMatches(col("t"), Pii.ssnPattern).as("n_ssns"),
             Pii.redact(col("t")).as("redacted"))
-          .orderBy("doc_id")
-      }
-    }.withBench { (s, d) =>
-      // production: the pass is pure map-side codegen — dropping the
-      // oracle-only total sort leaves ZERO exchanges (one scan, no
-      // shuffle, regardless of corpus size)
-      import graft.ops.Pii
-      val aug = concat(
-        col("text"),
-        when(col("doc_id") % 3 =!= 0,
-          concat(lit(" contact user"), col("doc_id").cast("string"), lit("@example.com")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 2 === 0,
-          concat(lit(" host 10."), (col("doc_id") % 200).cast("string"), lit(".3.7")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" ssn 537-28-"), (lit(1000) + col("doc_id") % 9000).cast("string")))
-          .otherwise(lit("")))
-      Tables.documents(s, d)
-        .select(col("doc_id"), aug.as("t"))
-        .select(col("doc_id"),
-          Pii.countMatches(col("t"), Pii.emailPattern).as("n_emails"),
-          Pii.countMatches(col("t"), Pii.ipv4Pattern).as("n_ips"),
-          Pii.countMatches(col("t"), Pii.ssnPattern).as("n_ssns"),
-          Pii.redact(col("t")).as("redacted"))
-    },
+    }.oracleOrder("doc_id"),
 
     sql("t14_quality_calibration",
       "Text: cross-source quality calibration — raw quality proxies are not comparable across sources (a crawl source's median differs from a curated one's), so each doc's score maps to its WITHIN-SOURCE percentile (percent_rank: ties share a rank, (rank-1)/(n-1) is exact small-integer IEEE division — bit-portable with no rounding) plus its global percentile; thresholding q_pct >= x then takes the same fraction from every source instead of starving the low-scoring ones",
@@ -527,7 +502,10 @@ object TextQueries {
         |  ORDER BY score DESC, term) AS rank FROM scored)
         |SELECT doc_id, CAST(rank AS INT) AS rank, term, CAST(score AS BIGINT) AS score
         | FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin.replace("\n", "")) {
-      (s, d) => {
+      (s, d) =>
+        // a tf checkpoint + widen were A/B-measured no-win (r19): the tf
+        // agg exchange is already reused across the df build and the join
+        // probe
         val docs = Tables.documents(s, d)
         val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -540,26 +518,7 @@ object TextQueries {
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("doc_id"), col("rank"), col("term"), col("score"))
-          .orderBy("doc_id", "rank")
-      }
-    }.withBench { (s, d) =>
-      // production (r19): top-3 per doc is table-sized — the trailing
-      // total ORDER BY exists only for the oracle hash compare. (A tf
-      // checkpoint + widen were A/B-measured no-win: the tf agg exchange
-      // is already reused across the df build and the join probe.)
-      val docs = Tables.documents(s, d)
-      val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-      tf.join(dfT, "term").crossJoin(broadcast(n))
-        .withColumn("score", expr("tf * n div df"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("doc_id"), col("rank"), col("term"), col("score"))
-    },
+    }.oracleOrder("doc_id", "rank"),
 
     sql("t18_url_dedup",
       "Text: URL CANONICALIZATION dedup — the crawl-frontier normalizer: messy deterministic URL variants (scheme/host case, :443 ports, utm/ref query tags, fragments, trailing slashes — synthesized per doc_id since the corpus carries no real URLs) collapse to one canonical form per logical resource; canonical groups count their members and keep the min-id survivor. One regexp chain map-side + one hash agg; the same canonicalizer both engines, so even the messy-variant construction is cross-checked",

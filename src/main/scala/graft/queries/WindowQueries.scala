@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QuerySpec
@@ -22,96 +21,14 @@ import graft.model.Tables
   * timestamps to micros (Tables.events) while DuckDB keeps nanos, so a
   * ts-ordered window could legitimately disagree on sub-microsecond ties.
   *
-  * Bench variants (r18): the w2–w8/w10 outputs are TABLE-sized (every
-  * order / every event), so the trailing total ORDER BY — needed only for
-  * the oracle's deterministic hash compare — is a real global sort of the
-  * full output. Each query's core is the shared plan; `run` appends the
-  * oracle sort, `production` is the core alone (the same discipline dd1/
-  * dd2/o14 already follow). Group-sized outputs (w1/w9/w11) keep the sort
-  * — it costs nothing there.
+  * Oracle order: the w2–w8/w10 outputs are TABLE-sized (every order /
+  * every event), so their total ORDER BY — needed only for the oracle's
+  * row-ordered compare — is declared with `oracleOrder` and applied by
+  * `run` alone; `production` writes the window output unsorted.
+  * Group-sized outputs (w1/w9/w11) keep the sort in the body — it costs
+  * nothing there.
   */
 object WindowQueries {
-
-  private def w2core(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-    Tables.events(s, d)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_id"), col("value"),
-        lag("value", 1).over(w).as("prev_value"),
-        lead("value", 1).over(w).as("next_value"))
-  }
-
-  private def w3core(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-      .rowsBetween(-2, Window.currentRow)
-    Tables.events(s, d)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_id"),
-        round(avg("value").over(w), 4).as("moving_avg"))
-  }
-
-  private def w4core(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice").desc)
-    Tables.orders(s, d)
-      .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
-        rank().over(w).cast("long").as("price_rank"),
-        dense_rank().over(w).cast("long").as("price_dense_rank"))
-  }
-
-  private def w5core(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"),
-        sum(col("o_totalprice").cast("decimal(18,4)")).over(w)
-          .cast("double").as("running_total"))
-  }
-
-  private def w6core(s: SparkSession, d: String): DataFrame = {
-    // RANGE frames bound by VALUE distance: epoch-second ordering makes
-    // the frame a true trailing time window (peers with equal seconds
-    // are always included together, so micros-vs-nanos storage cannot
-    // flip membership)
-    val w = Window.partitionBy("user_id")
-      .orderBy(unix_timestamp(date_trunc("second", col("ts"))))
-      .rangeBetween(-3600, Window.currentRow)
-    Tables.events(s, d)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_id"),
-        count(lit(1)).over(w).as("n_last_hour"))
-  }
-
-  private def w7core(s: SparkSession, d: String): DataFrame = {
-    val ord = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val full = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.orders(s, d)
-      .select(col("o_orderpriority"), col("o_orderkey"),
-        ntile(4).over(ord).cast("long").as("price_quartile"),
-        first("o_orderkey").over(full).as("top_order"),
-        last("o_orderkey").over(full).as("bottom_order"))
-  }
-
-  private def w8core(s: SparkSession, d: String): DataFrame = {
-    // both functions depend only on the RANK of the order-by value,
-    // so price ties produce identical output in any engine — no
-    // tie-break column needed (unlike row_number-based queries)
-    val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
-    Tables.orders(s, d)
-      .select(col("o_orderpriority"), col("o_orderkey"),
-        round(percent_rank().over(w), 6).as("pct_rank"),
-        round(cume_dist().over(w), 6).as("cume"))
-  }
-
-  private def w10core(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"),
-        date_trunc("second", col("ts")).as("ts"), col("value"))
-      .selectExpr("event_id", "user_id",
-        """CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
-          | RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h""".stripMargin.replace("\n", ""),
-        """CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (PARTITION BY user_id ORDER BY ts
-          | RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h""".stripMargin.replace("\n", ""))
 
   val all: Seq[QuerySpec] = Seq(
 
@@ -141,8 +58,14 @@ object WindowQueries {
         | LEAD(value) OVER (PARTITION BY user_id ORDER BY event_id) AS next_value
         | FROM events WHERE user_id IS NOT NULL
         | ORDER BY user_id, event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => w2core(s, d).orderBy("user_id", "event_id")
-    }.withBench(w2core),
+      (s, d) =>
+        val w = Window.partitionBy("user_id").orderBy("event_id")
+        Tables.events(s, d)
+          .filter(col("user_id").isNotNull)
+          .select(col("user_id"), col("event_id"), col("value"),
+            lag("value", 1).over(w).as("prev_value"),
+            lead("value", 1).over(w).as("next_value"))
+    }.oracleOrder("user_id", "event_id"),
 
     sql("w3_sliding_avg",
       "W1: sliding frame aggregate (3-row moving average) per user",
@@ -151,8 +74,14 @@ object WindowQueries {
         |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS moving_avg
         | FROM events WHERE user_id IS NOT NULL
         | ORDER BY user_id, event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => w3core(s, d).orderBy("user_id", "event_id")
-    }.withBench(w3core),
+      (s, d) =>
+        val w = Window.partitionBy("user_id").orderBy("event_id")
+          .rowsBetween(-2, Window.currentRow)
+        Tables.events(s, d)
+          .filter(col("user_id").isNotNull)
+          .select(col("user_id"), col("event_id"),
+            round(avg("value").over(w), 4).as("moving_avg"))
+    }.oracleOrder("user_id", "event_id"),
 
     sql("w4_rank_dense",
       "W1: RANK and DENSE_RANK with value ties, partitioned by order priority",
@@ -161,9 +90,13 @@ object WindowQueries {
         | DENSE_RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS price_dense_rank
         | FROM orders
         | ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => w4core(s, d)
-        .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
-    }.withBench(w4core),
+      (s, d) =>
+        val w = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice").desc)
+        Tables.orders(s, d)
+          .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
+            rank().over(w).cast("long").as("price_rank"),
+            dense_rank().over(w).cast("long").as("price_dense_rank"))
+    }.oracleOrder(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey")),
 
     sql("w7_ntile_firstlast",
       "W1: NTILE quartiles + FIRST_VALUE/LAST_VALUE frame endpoints per priority",
@@ -177,8 +110,16 @@ object WindowQueries {
         |   ORDER BY o_totalprice DESC, o_orderkey
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS bottom_order
         | FROM orders ORDER BY o_orderpriority, o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => w7core(s, d).orderBy("o_orderpriority", "o_orderkey")
-    }.withBench(w7core),
+      (s, d) =>
+        val ord = Window.partitionBy("o_orderpriority")
+          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+        val full = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        Tables.orders(s, d)
+          .select(col("o_orderpriority"), col("o_orderkey"),
+            ntile(4).over(ord).cast("long").as("price_quartile"),
+            first("o_orderkey").over(full).as("top_order"),
+            last("o_orderkey").over(full).as("bottom_order"))
+    }.oracleOrder("o_orderpriority", "o_orderkey"),
 
     sql("w6_range_frame",
       "W1: RANGE frame — events per user in the trailing hour (time-valued frame, not row-counted)",
@@ -188,8 +129,19 @@ object WindowQueries {
         |   RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_last_hour
         | FROM events WHERE user_id IS NOT NULL
         | ORDER BY user_id, event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => w6core(s, d).orderBy("user_id", "event_id")
-    }.withBench(w6core),
+      (s, d) =>
+        // RANGE frames bound by VALUE distance: epoch-second ordering makes
+        // the frame a true trailing time window (peers with equal seconds
+        // are always included together, so micros-vs-nanos storage cannot
+        // flip membership)
+        val w = Window.partitionBy("user_id")
+          .orderBy(unix_timestamp(date_trunc("second", col("ts"))))
+          .rangeBetween(-3600, Window.currentRow)
+        Tables.events(s, d)
+          .filter(col("user_id").isNotNull)
+          .select(col("user_id"), col("event_id"),
+            count(lit(1)).over(w).as("n_last_hour"))
+    }.oracleOrder("user_id", "event_id"),
 
     sql("w8_pct_rank_cume",
       "W1: percent_rank + cume_dist per order priority (relative standing — both rank-derived, tie-stable)",
@@ -197,8 +149,16 @@ object WindowQueries {
         | ROUND(PERCENT_RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice), 6) AS pct_rank,
         | ROUND(CUME_DIST() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice), 6) AS cume
         | FROM orders ORDER BY o_orderpriority, o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => w8core(s, d).orderBy("o_orderpriority", "o_orderkey")
-    }.withBench(w8core),
+      (s, d) =>
+        // both functions depend only on the RANK of the order-by value,
+        // so price ties produce identical output in any engine — no
+        // tie-break column needed (unlike row_number-based queries)
+        val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
+        Tables.orders(s, d)
+          .select(col("o_orderpriority"), col("o_orderkey"),
+            round(percent_rank().over(w), 6).as("pct_rank"),
+            round(cume_dist().over(w), 6).as("cume"))
+    }.oracleOrder("o_orderpriority", "o_orderkey"),
 
     sql("w5_running_sum",
       "W1: cumulative (unbounded-preceding) sum per customer, exact DECIMAL accumulation",
@@ -207,8 +167,14 @@ object WindowQueries {
         |   PARTITION BY o_custkey ORDER BY o_orderkey
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
         | FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin.replace("\n", "")) {
-      (s, d) => w5core(s, d).orderBy("o_custkey", "o_orderkey")
-    }.withBench(w5core),
+      (s, d) =>
+        val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        Tables.orders(s, d)
+          .select(col("o_custkey"), col("o_orderkey"),
+            sum(col("o_totalprice").cast("decimal(18,4)")).over(w)
+              .cast("double").as("running_total"))
+    }.oracleOrder("o_custkey", "o_orderkey"),
 
     sql("w10_time_range_window",
       "W10: TIME-interval RANGE frame — per-user trailing-1-hour event count and exact-decimal value sum at every event (the velocity / rate-limit feature); RANGE peers at one instant share the frame in both engines, so second-truncated ties stay deterministic. One user-keyed window, no self-join against a time grid",
@@ -220,8 +186,16 @@ object WindowQueries {
         | WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |   RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
         | ORDER BY event_id""".stripMargin.replace("\n", "")) {
-      (s, d) => w10core(s, d).orderBy("event_id")
-    }.withBench(w10core),
+      (s, d) =>
+        Tables.events(s, d).filter(col("user_id").isNotNull)
+          .select(col("event_id"), col("user_id"),
+            date_trunc("second", col("ts")).as("ts"), col("value"))
+          .selectExpr("event_id", "user_id",
+            """CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
+              | RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h""".stripMargin.replace("\n", ""),
+            """CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (PARTITION BY user_id ORDER BY ts
+              | RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h""".stripMargin.replace("\n", ""))
+    }.oracleOrder("event_id"),
 
     sql("w9_activity_streaks",
       "W9: gaps-and-islands — per-user consecutive-day activity streaks via the day-minus-row_number grouping trick (all integer day arithmetic, engine-exact); the retention/engagement-streak primitive. Work = one user-keyed window over the DISTINCT (user, day) sliver, never the event stream",

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions — the 100 TB design claims, checked against the
@@ -471,10 +473,54 @@ class PlanSpec extends AnyFunSuite {
     assert(plan(specs("ss1_cosine_topk").run(spark, TestSpark.sfDir)).contains("TakeOrderedAndProject"))
   }
 
+  /** The child of an analyzed plan's root global Sort, if the root is one.
+    * Window queries keep per-partition (global = false) Sorts below the
+    * root, so only the root decides whether a plan ends in a total sort. */
+  private def underRootSort(p: LogicalPlan): Option[LogicalPlan] = p match {
+    case s: Sort if s.global => Some(s.child)
+    case _ => None
+  }
+
   test("production plans drop the oracle-only total sort") {
-    for (name <- Seq("p1_clean_filter", "p5_project_cast", "d1_bucket_features", "f_scalar_funcs")) {
-      val p = plan(specs(name).production(spark, TestSpark.sfDir))
-      assert(!p.contains("Sort "), s"$name production plan still sorts:\n$p")
+    // every spec that declares an oracle order: production has no root
+    // total sort, and run ends in one on exactly the declared keys (the
+    // row-ordered compare in tools/compare_oracle.py depends on it)
+    val ordered = SparkEntry.specs.filter(_.order.nonEmpty)
+    assert(ordered.size >= 38, s"only ${ordered.size} specs declare an oracle order")
+    // a bare col("x") is an ascending sort with Spark's default nulls-first
+    def expected(c: Column): String = {
+      val t = c.toString
+      if (t.endsWith(" NULLS FIRST") || t.endsWith(" NULLS LAST")) t else s"$t ASC NULLS FIRST"
+    }
+    for (spec <- ordered) {
+      val prod = spec.production(spark, TestSpark.sfDir).queryExecution.analyzed
+      assert(underRootSort(prod).isEmpty,
+        s"${spec.name} production plan ends in a total sort:\n$prod")
+      spec.run(spark, TestSpark.sfDir).queryExecution.analyzed match {
+        case s: Sort if s.global =>
+          val keys = s.order.map { o =>
+            s"${o.child.asInstanceOf[Attribute].name} ${o.direction.sql} ${o.nullOrdering.sql}"
+          }
+          assert(keys == spec.order.map(expected),
+            s"${spec.name} run sorts on $keys, declared ${spec.order}")
+        case other =>
+          fail(s"${spec.name} declares an oracle order but run's root is not a total sort:\n$other")
+      }
+    }
+  }
+
+  test("registry guard: no bench variant is only the oracle plan minus its total sort") {
+    // A variant equal to run's body under the root sort is a sort-drop
+    // copy: declare the order with oracleOrder and delete the variant.
+    // Only analyzed plans are compared (an eager localCheckpoint inside a
+    // body still runs while it is built). sameResult never matches two
+    // separately built checkpoints, so a copy over one is not caught here.
+    for (spec <- SparkEntry.specs if spec.benchRun.isDefined) {
+      underRootSort(spec.run(spark, TestSpark.sfDir).queryExecution.analyzed).foreach { body =>
+        val prod = spec.production(spark, TestSpark.sfDir).queryExecution.analyzed
+        assert(!body.sameResult(prod),
+          s"${spec.name}: the bench variant only drops run's total sort — use oracleOrder")
+      }
     }
   }
 
@@ -763,9 +809,6 @@ class PlanSpec extends AnyFunSuite {
       "tools/SkewBench.scala" -> 1,
       "tools/AnnRecall.scala" -> 6,
       "tools/DsNineLadder.scala" -> 1,
-      // r18 stage-probe HARNESS (guide §1 measure-first): dd8's sanctioned
-      // batch-split scalar, reproduced so the probe times the real shape
-      "tools/StageBench2.scala" -> 1,
       "engine/WriteGuard.scala" -> 1,
       "queries/DedupQueries.scala" -> 1)
     val found = mainSourceLines
@@ -826,9 +869,7 @@ class PlanSpec extends AnyFunSuite {
       "queries/ExtraQueries.scala" -> 8,
       "queries/StatsQueries.scala" -> 6,
       "queries/SimilarityQueries.scala" -> 3,
-      // 7 (r19): t17's sort-drop production variant repeats the run
-      // path's broadcast(n) — the same 1-row global-count frame
-      "queries/TextQueries.scala" -> 7,
+      "queries/TextQueries.scala" -> 6,
       "queries/LlmPipelineQueries.scala" -> 1,
       "queries/DsQueries.scala" -> 3)
     val found = mainSourceLines

@@ -39,7 +39,7 @@ object SparkEntry {
       case Right(c) => c
       case Left(err) => throw new IllegalArgumentException(s"bad GRAFT_* config: $err")
     }
-    val reports = graft.pipeline.Pipeline.run(spark, Seq("/root/testdata/sf0.001"), out,
+    val (reports, _) = graft.pipeline.Pipeline.runInstrumented(spark, Seq("/root/testdata/sf0.001"), out,
       jdbc = cfg.jdbc, jdbcBatchSize = cfg.batchSize, guard = cfg.guard)
     // The report has one row per stage regardless of stage outcome, so a
     // bare rows>0 smoke check would pass even on total failure — gate it.

@@ -37,12 +37,8 @@ object Sessions {
       // operators are exempt from coalescing and would inherit the full
       // initial width as their state-store count — those pin their own
       // width at the seam instead: StatefulOps.rebindForBatchState.)
-      // SPARK_GRAFT_AQE_INITIAL_FACTOR overrides the multiplier for
-      // same-code A/B measurement of this setting (r17 ask #7).
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions.toInt *
-          sys.env.get("SPARK_GRAFT_AQE_INITIAL_FACTOR")
-            .map(_.toInt).getOrElse(8)).toString)
+        (shufflePartitions.toInt * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Generated-class cache (STATIC conf, default 100 entries): a
       // long-lived session serving the whole 251-query registry evicts

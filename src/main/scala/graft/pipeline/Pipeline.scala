@@ -53,7 +53,6 @@ object Pipeline {
   }
 
   def processDir(spark: SparkSession, dir: String, outDir: String,
-                 exactPercentiles: Boolean = false,
                  jdbc: Option[graft.engine.Config.Jdbc] = None,
                  jdbcBatchSize: Int = 1000,
                  guard: graft.engine.PlanGuard.Policy = graft.engine.PlanGuard.Policy.default): DirReport = {
@@ -96,7 +95,7 @@ object Pipeline {
     // clean + derive (D1–D3), cached across the downstream actions (C1)
     val cleaned = Cleaning.iqrFilter(
       Cleaning.applyRules(li, CoreQueries.cleanRules),
-      "l_extendedprice", exact = exactPercentiles)
+      "l_extendedprice", exact = false)
     val enriched = cleaned
       .withColumn("quantity_bucket",
         Features.bucketize(col("l_quantity"), CoreQueries.bucketSplits, CoreQueries.bucketLabels))
@@ -173,33 +172,21 @@ object Pipeline {
     DirReport(dir, stages.toSeq)
   }
 
-  /** The per-month loop: one report per directory, failures isolated.
+  /** The EP1 per-month loop: one report per directory, failures isolated.
+    * A [[PipelineMetrics]] listener captures every stage the run executes
+    * (task counts / bytes / spills, attributed to its directory via a
+    * per-dir job group — the reference's psutil monitor, re-expressed
+    * executor-side); draining the listener bus before attaching it and
+    * before the snapshot makes the rows exactly this run's stages.
     * `jdbc`/`jdbcBatchSize` (usually from [[graft.engine.Config.fromEnv]])
     * switch on the warehouse summary append per directory. */
-  def run(spark: SparkSession, dirs: Seq[String], outRoot: String,
-          jdbc: Option[graft.engine.Config.Jdbc] = None,
-          jdbcBatchSize: Int = 1000,
-          guard: graft.engine.PlanGuard.Policy = graft.engine.PlanGuard.Policy.default): Seq[DirReport] =
-    dirs.map { dir =>
-      val name = dir.replaceAll(".*/", "")
-      processDir(spark, dir, s"$outRoot/$name", jdbc = jdbc, jdbcBatchSize = jdbcBatchSize,
-        guard = guard)
-    }
-
-  /** [[run]] with a [[PipelineMetrics]] listener attached: every stage the
-    * pipeline executes is captured with task counts / bytes / spills and
-    * attributed to its directory via a per-dir job group (the reference's
-    * psutil monitor, re-expressed executor-side — see [[PipelineMetrics]]).
-    * The listener bus is async, so we poll until the stage count settles
-    * before snapshotting (bounded wait; no private Spark API). */
   def runInstrumented(spark: SparkSession, dirs: Seq[String], outRoot: String,
-                      settleMs: Long = 500, maxWaitMs: Long = 15000,
-                      writeMetrics: Boolean = true,
                       jdbc: Option[graft.engine.Config.Jdbc] = None,
                       jdbcBatchSize: Int = 1000,
                       guard: graft.engine.PlanGuard.Policy = graft.engine.PlanGuard.Policy.default)
       : (Seq[DirReport], Seq[StageMetricsRow]) = {
     val listener = new PipelineMetrics
+    PipelineMetrics.drain(spark.sparkContext) // earlier actions' events may still be queued
     spark.sparkContext.addSparkListener(listener)
     try {
       val reports = dirs.map { dir =>
@@ -209,18 +196,11 @@ object Pipeline {
           guard = guard)
         finally spark.sparkContext.clearJobGroup()
       }
-      val deadline = System.currentTimeMillis() + maxWaitMs
-      var last = -1
-      var cur = listener.snapshot.size
-      while (cur != last && System.currentTimeMillis() < deadline) {
-        last = cur
-        Thread.sleep(settleMs)
-        cur = listener.snapshot.size
-      }
+      PipelineMetrics.drain(spark.sparkContext)
       val rows = listener.snapshot
       // the monitoring artifact the reference writes as a CSV report
       // (pipeline_monitor metrics log) — KB-scale, one row per stage
-      if (writeMetrics && rows.nonEmpty)
+      if (rows.nonEmpty)
         Sinks.csv(metricsDF(spark, rows), s"$outRoot/_stage_metrics", singleFile = true)
       (reports, rows)
     } finally spark.sparkContext.removeSparkListener(listener)

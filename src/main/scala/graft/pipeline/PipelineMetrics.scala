@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** One completed Spark stage, attributed to the pipeline directory whose
@@ -18,9 +20,9 @@ final case class StageMetricsRow(
   * vitals, and it works unchanged on a 1000-executor cluster where there
   * is no single process to poll (SURVEY.md §7.7).
   *
-  * The listener bus is asynchronous; [[Pipeline.runInstrumented]] settles
-  * the queue before snapshotting. Accumulation is driver-side and O(#
-  * stages) — a few hundred tiny rows per pipeline run, not data-scale.
+  * The listener bus is asynchronous; [[Pipeline.runInstrumented]] drains
+  * it ([[PipelineMetrics.drain]]) before snapshotting. Accumulation is
+  * driver-side and O(# stages) — a few hundred tiny rows per run.
   */
 final class PipelineMetrics extends SparkListener {
 
@@ -52,5 +54,33 @@ final class PipelineMetrics extends SparkListener {
   def snapshot: Seq[StageMetricsRow] = {
     import scala.jdk.CollectionConverters._
     done.iterator.asScala.toSeq.sortBy(_.stageId)
+  }
+}
+
+object PipelineMetrics {
+
+  /** Returns once every event posted before the call, including all events
+    * of every finished action, has reached every listener on the shared
+    * queue (where `addSparkListener` puts them). A queue delivers in posting
+    * order, so it waits for the start of a zero-partition marker job, which
+    * runs no task. Throws rather than return with events pending. */
+  def drain(sc: SparkContext): Unit = {
+    val marker = s"graft-drain-${java.util.UUID.randomUUID()}"
+    val delivered = new CountDownLatch(1)
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) delivered.countDown()
+    }
+    val callerGroup = sc.getLocalProperty("spark.jobGroup.id")
+    sc.addSparkListener(probe)
+    try {
+      sc.setLocalProperty("spark.jobGroup.id", marker)
+      sc.emptyRDD[Int].count()
+      if (!delivered.await(60, TimeUnit.SECONDS))
+        throw new TimeoutException("listener bus did not deliver the drain marker within 60 s")
+    } finally {
+      sc.setLocalProperty("spark.jobGroup.id", callerGroup)
+      sc.removeSparkListener(probe)
+    }
   }
 }

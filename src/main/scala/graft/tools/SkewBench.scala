@@ -182,8 +182,8 @@ object SkewBench {
       val t0 = System.nanoTime()
       val rows = df.collect().map(_.toSeq.mkString("|")).toSet
       val wall = (System.nanoTime() - t0) / 1e9
-      // wait for straggler task-end events before reading the buffer
-      Thread.sleep(500)
+      // every task-end event of the action reaches the buffer first
+      graft.pipeline.PipelineMetrics.drain(spark.sparkContext)
       val (sid, n, maxR, medR, ratio, maxMs, medMs) = shuffleStage()
       val stats = s""""$name":{"wall_sec":${f"$wall%.2f"},"stage":$sid,""" +
         s""""tasks":$n,"max_task_rows":$maxR,"median_task_rows":$medR,""" +

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.io.{Ddl, FileUtils, Sinks}
@@ -11,16 +13,38 @@ import graft.io.{Ddl, FileUtils, Sinks}
 class PipelineSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private lazy val outDir = {
+  /** Runs `body` with a shared-queue listener that takes ~200 ms per stage,
+    * after six warm multi-stage actions whose stage events are therefore
+    * still queued; `body` gets the listener's stage count. */
+  private def withSlowListener[T](body: AtomicInteger => T): T = {
+    def action() = spark.range(0, 2000, 1, 2).selectExpr("id % 97 AS k").groupBy("k").count().collect()
+    action()
+    val stages = new AtomicInteger
+    val slow = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        Thread.sleep(200)
+        stages.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      for (_ <- 1 to 6) action()
+      body(stages)
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  // one instrumented EP1 run shared by the artifact tests; it starts with
+  // earlier actions' stage events still queued and must record none of them
+  private lazy val (reports, metrics, outDir) = withSlowListener { _ =>
     val d = Files.createTempDirectory("graft-pipe").toString
-    Pipeline.run(spark, Seq(TestSpark.sfDir), d) -> d
+    val (r, m) = Pipeline.runInstrumented(spark, Seq(TestSpark.sfDir), d)
+    (r, m, d)
   }
 
   test("pipeline runs every stage green and writes all artifacts") {
-    val (reports, dir) = outDir
     assert(reports.size == 1 && reports.head.ok,
       reports.head.stages.filterNot(_.ok).mkString("; "))
-    val arts = s"$dir/sf0.001"
+    val arts = s"$outDir/sf0.001"
     for (a <- Seq("supplier_stats", "bucket_stats", "sample_load"))
       assert(spark.read.parquet(s"$arts/$a").count() > 0, s"$a empty")
     val q = spark.read.option("header", "true").csv(s"$arts/quality_report").collect()
@@ -28,39 +52,29 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("stage rows come from the write job itself — no post-sink re-scan") {
-    // capture every job's callsite while a fresh processDir runs; the old
-    // shape launched a `count at Pipeline.scala:N` job per sink to produce
-    // the report row count (a full second scan of each artifact at scale)
-    val callsites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        callsites.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out = java.nio.file.Files.createTempDirectory("graft-obs").toString
-    val report =
-      try Pipeline.processDir(spark, TestSpark.sfDir, out)
-      finally {
-        // async listener bus: settle until the event count stops moving
-        val deadline = System.currentTimeMillis() + 15000
-        var last = -1
-        while (callsites.size != last && System.currentTimeMillis() < deadline) {
-          last = callsites.size
-          Thread.sleep(300)
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    assert(report.ok, report.stages.filterNot(_.ok).mkString("; "))
-    import scala.jdk.CollectionConverters._
-    val pipelineCounts = callsites.iterator.asScala
-      .filter(cs => cs.startsWith("count at") && cs.contains("Pipeline.scala")).toSeq
-    assert(pipelineCounts.isEmpty, s"pipeline re-scanned its own sinks: $pipelineCounts")
+    // a stage's name is the call site of its job. The old shape re-read
+    // each sink with `spark.read.parquet(path).count()` in Pipeline.scala
+    // for the report row count (a full second scan of each artifact at
+    // scale); the pipeline launches every job from Sinks/Quality/Tables
+    val sites = metrics.map(_.name)
+    assert(sites.exists(_.startsWith("parquet at Sinks.scala")), sites)
+    val pipelineJobs = sites.filter(_.contains(" at Pipeline.scala:"))
+    assert(pipelineJobs.isEmpty, s"pipeline re-scanned its own sinks: $pipelineJobs")
     // and the observed counts agree with what actually landed on disk
-    val byStage = report.stages.map(s => s.stage -> s.rows).toMap
+    val byStage = reports.head.stages.map(s => s.stage -> s.rows).toMap
     for (a <- Seq("sample_load", "supplier_stats", "bucket_stats"))
-      assert(byStage(a) == spark.read.parquet(s"$out/$a").count(),
+      assert(byStage(a) == spark.read.parquet(s"$outDir/sf0.001/$a").count(),
         s"$a reported ${byStage(a)} rows but the artifact disagrees")
+  }
+
+  test("drain returns only after a slow listener has seen every stage of the finished actions") {
+    withSlowListener { stages =>
+      PipelineMetrics.drain(spark.sparkContext)
+      val drained = stages.get
+      assert(drained > 0, "no stage reached the listener before drain returned")
+      Thread.sleep(1000)
+      assert(stages.get == drained, s"${stages.get - drained} stage(s) arrived after drain")
+    }
   }
 
   test("error isolation: missing table reports a failed scan, never throws") {
@@ -78,7 +92,7 @@ class PipelineSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$poisoned/lineitem.parquet")
     val out = Files.createTempDirectory("graft-multi").toString
 
-    val reports = Pipeline.run(spark, Seq(TestSpark.sfDir, poisoned), out)
+    val (reports, _) = Pipeline.runInstrumented(spark, Seq(TestSpark.sfDir, poisoned), out)
     assert(reports.size == 2)
     val (good, bad) = (reports(0), reports(1))
     assert(good.ok, good.stages.filterNot(_.ok).mkString("; "))
@@ -92,18 +106,15 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("instrumented run captures per-stage metrics attributed to the dir's job group") {
-    val out = Files.createTempDirectory("graft-instr").toString
-    val (reports, metrics) = Pipeline.runInstrumented(spark, Seq(TestSpark.sfDir), out)
-    assert(reports.forall(_.ok))
     assert(metrics.nonEmpty, "listener captured no stages")
-    assert(metrics.exists(_.group == "graft-pipeline-sf0.001"),
-      s"no stage attributed to the pipeline job group; groups=${metrics.map(_.group).distinct}")
+    assert(metrics.forall(_.group == "graft-pipeline-sf0.001"),
+      s"stage outside the pipeline job group; groups=${metrics.map(_.group).distinct}")
     assert(metrics.exists(_.inputBytes > 0), "no stage read any input bytes")
     assert(metrics.forall(_.numTasks > 0))
     val df = Pipeline.metricsDF(spark, metrics)
     assert(df.columns.contains("shuffleReadBytes") && df.count() == metrics.size)
     // the monitoring artifact lands next to the data artifacts
-    val csv = spark.read.option("header", "true").csv(s"$out/_stage_metrics")
+    val csv = spark.read.option("header", "true").csv(s"$outDir/_stage_metrics")
     assert(csv.count() == metrics.size && csv.columns.contains("inputBytes"))
   }
 
@@ -125,8 +136,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("reports (EP2) generate from pipeline artifacts via spark.sql") {
-    val (_, dir) = outDir
-    val arts = s"$dir/sf0.001"
+    val arts = s"$outDir/sf0.001"
     val reportsDir = Files.createTempDirectory("graft-reports").toString
     Reports.generate(spark, TestSpark.sfDir, arts, reportsDir)
     val summary = spark.read.option("header", "true").csv(s"$reportsDir/summary")
@@ -140,13 +150,12 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("DDL (S6): catalog tables create over artifact locations, idempotently") {
-    val (_, dir) = outDir
-    val results = Ddl.createAnalyticsTables(spark, s"$dir/sf0.001")
+    val results = Ddl.createAnalyticsTables(spark, s"$outDir/sf0.001")
     assert(results.forall(_.isRight), results.collect { case Left(e) => e }.mkString)
     assert(spark.catalog.tableExists("supplier_stats"))
     assert(spark.sql("SELECT * FROM supplier_stats").count() > 0)
     assert(spark.sql("SELECT * FROM pipeline_quality").count() == 1)
-    assert(Ddl.createAnalyticsTables(spark, s"$dir/sf0.001").forall(_.isRight))
+    assert(Ddl.createAnalyticsTables(spark, s"$outDir/sf0.001").forall(_.isRight))
     Seq("supplier_stats", "bucket_stats", "pipeline_quality")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }

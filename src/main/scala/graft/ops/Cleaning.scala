@@ -39,27 +39,35 @@ object Cleaning {
 
   /** Exact Q1/Q3 via sort-based `percentile` — used when results must be
     * oracle-reproducible (SURVEY.md §7.4.3). One extra pass over one column.
+    * `None` when the column holds no non-null value (empty input included).
     */
-  def quartilesExact(df: DataFrame, column: String): (Double, Double) = {
+  def quartilesExact(df: DataFrame, column: String): Option[(Double, Double)] = {
     val row = df.agg(
       expr(s"percentile($column, 0.25)").as("q1"),
       expr(s"percentile($column, 0.75)").as("q3")).head()
-    (row.getDouble(0), row.getDouble(1))
+    if (row.isNullAt(0)) None else Some((row.getDouble(0), row.getDouble(1)))
   }
 
   /** Approximate Q1/Q3 via a single-pass quantile sketch — the 100 TB path
-    * (constant memory per partition, mergeable). */
-  def quartilesApprox(df: DataFrame, column: String, accuracy: Int = 10000): (Double, Double) = {
-    val Array(q1, q3) = df.stat.approxQuantile(column, Array(0.25, 0.75), 1.0 / accuracy)
-    (q1, q3)
-  }
+    * (constant memory per partition, mergeable). `None` when the column
+    * holds no non-null, non-NaN value: `approxQuantile` then returns no
+    * quantiles at all. */
+  def quartilesApprox(df: DataFrame, column: String, accuracy: Int = 10000): Option[(Double, Double)] =
+    df.stat.approxQuantile(column, Array(0.25, 0.75), 1.0 / accuracy) match {
+      case Array(q1, q3) => Some((q1, q3))
+      case _             => None
+    }
 
   /** P2: two-pass IQR outlier filter. Pass 1 reduces one column to two
     * scalars (tiny driver result — not a `collect` funnel); pass 2 is a
-    * pushed-down range filter. `exact=false` switches to the sketch. */
-  def iqrFilter(df: DataFrame, column: String, k: Double = 1.5, exact: Boolean = true): DataFrame = {
-    val (q1, q3) = if (exact) quartilesExact(df, column) else quartilesApprox(df, column)
-    val iqr = q3 - q1
-    df.filter(col(column).between(q1 - k * iqr, q3 + k * iqr))
-  }
+    * pushed-down range filter. `exact=false` switches to the sketch.
+    * A column with no non-null value has no quartiles and yields an empty
+    * frame: `between` already drops every null row, so no row could pass. */
+  def iqrFilter(df: DataFrame, column: String, k: Double = 1.5, exact: Boolean = true): DataFrame =
+    (if (exact) quartilesExact(df, column) else quartilesApprox(df, column)) match {
+      case Some((q1, q3)) =>
+        val iqr = q3 - q1
+        df.filter(col(column).between(q1 - k * iqr, q3 + k * iqr))
+      case None => df.filter(lit(false))
+    }
 }

@@ -8,19 +8,36 @@ import graft.ops.{Cleaning, Det, Features, Quality}
 import graft.queries.CoreQueries
 
 /** EP1 — the reference's pipeline orchestration re-expressed
-  * (reference: src/main.py:88-309): per-directory loop ("months"),
-  * schema gate → quality metrics → clean → derive(+cache) → sample-load →
-  * aggregate → sink artifacts → unpersist.
+  * (reference: src/main.py:88-309): a per-directory loop ("months"). Each
+  * month runs as a dependency DAG; `‖` joins branches that run at the
+  * same time, `→` orders steps within a branch, and each phase waits for
+  * the one above it:
+  * {{{
+  *   scan → schema gate                    (metadata only, no job)
+  *   A: quality_metrics ‖ (clean_derive → sample_load)
+  *   B: supplier_stats ‖ bucket_stats ‖ quality_csv [‖ summary_jdbc]
+  *   unpersist
+  * }}}
+  * Phase A reads only lineitem. `clean_derive` is the IQR quartile pass
+  * plus the lazy derive (D1–D3); `sample_load` builds the enriched cache
+  * on its own, so that phase B's sinks all read a finished cache.
+  * `quality_csv` is the one sink that needs phase A's quality report. Each
+  * branch runs on its own driver thread ([[concurrently]]); the stage
+  * results keep the order listed above, whatever order the branches
+  * finish in.
   *
   * Error-isolation policy is the reference's, made explicit instead of
   * bare try/except (SURVEY.md §7.4.7): a failed schema gate skips the
   * directory (src/main.py:114-116 `continue`); any other failed stage
   * records the error and the run continues (src/main.py:140-145,171-188).
+  * A failed `clean_derive` leaves nothing to derive, so of the sinks only
+  * `quality_csv` runs.
   *
   * Scale notes: `cache()` holds the enriched frame across the multiple
   * downstream actions exactly like the reference (C1/C2,
   * src/main.py:135-137,293-295); all sinks write distributed; the only
-  * driver materialization is the one-row quality report.
+  * driver materializations are the one-row quality report and the two
+  * quartiles.
   */
 object Pipeline {
 
@@ -52,20 +69,34 @@ object Pipeline {
     obs.get("rows").asInstanceOf[Long]
   }
 
+  /** Runs the branches at once and returns their results in the declared
+    * order. Each branch gets a fresh driver thread: a new thread copies
+    * the caller's Spark local properties (the job group among them) when
+    * it is created, while a pooled thread keeps the ones it was created
+    * with, so its jobs would land in a stale group. Every branch is joined
+    * before this returns or rethrows the first failure in declared order,
+    * so no job a branch submitted outlives the call. */
+  private[pipeline] def concurrently[T](branches: Seq[() => T]): Seq[T] = {
+    val results = new Array[Either[Throwable, T]](branches.size)
+    val threads = branches.zipWithIndex.map { case (branch, i) =>
+      val t = new Thread(() => results(i) = try Right(branch()) catch { case e: Throwable => Left(e) })
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    results.toSeq.map(_.fold(e => throw e, identity))
+  }
+
   def processDir(spark: SparkSession, dir: String, outDir: String,
                  jdbc: Option[graft.engine.Config.Jdbc] = None,
                  jdbcBatchSize: Int = 1000,
                  guard: graft.engine.PlanGuard.Policy = graft.engine.PlanGuard.Policy.default): DirReport = {
     val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    def stage(name: String)(f: => (Long, String)): Boolean = {
-      val r =
-        try { val (rows, detail) = f; StageResult(name, ok = true, rows, detail) }
-        catch { case e: Exception =>
-          StageResult(name, ok = false, -1, s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      stages += r
-      r.ok
-    }
+    def stage(name: String)(f: => (Long, String)): StageResult =
+      try { val (rows, detail) = f; StageResult(name, ok = true, rows, detail) }
+      catch { case e: Exception =>
+        StageResult(name, ok = false, -1, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
 
     val li =
       try Tables.lineitem(spark, dir)
@@ -85,77 +116,88 @@ object Pipeline {
         stages += StageResult("schema_gate", ok = true, -1, "ok")
     }
 
+    // phase A: the quality report ‖ (quartile pass → derive → sample_load).
+    // sample_load alone builds the enriched cache (C1); phase B reads it
+    // only once it is built. Queries that read a cache while another query
+    // builds it each launch their own materialization job and plan from
+    // cache statistics the build has not finished; with sample_load in
+    // phase B, one month's supplier_stats was once written empty while its
+    // stage reported success. Each branch writes its own var; the join
+    // publishes them.
     var quality: Option[Quality.QualityReport] = None
-    stage("quality_metrics") {
-      val r = Quality.report(li, Seq("l_quantity", "l_extendedprice"), CoreQueries.violationRules)
-      quality = Some(r)
-      (r.totalRows, f"score=${r.qualityScore}%.2f dups=${r.duplicateCount}")
-    }
-
-    // clean + derive (D1–D3), cached across the downstream actions (C1)
-    val cleaned = Cleaning.iqrFilter(
-      Cleaning.applyRules(li, CoreQueries.cleanRules),
-      "l_extendedprice", exact = false)
-    val enriched = cleaned
-      .withColumn("quantity_bucket",
-        Features.bucketize(col("l_quantity"), CoreQueries.bucketSplits, CoreQueries.bucketLabels))
-      .withColumn("price_per_unit",
-        Features.guardedDiv(col("l_extendedprice"), col("l_quantity")))
-      .withColumn("discount_pct",
-        Features.guardedPct(col("l_extendedprice") * col("l_discount"), col("l_extendedprice")))
-      .cache()
+    var enriched: Option[DataFrame] = None
+    def overEnriched(name: String)(f: DataFrame => (Long, String)): Option[() => StageResult] =
+      enriched.map(e => () => stage(name)(f(e)))
     try {
-      stage("clean_derive") {
-        ((-1L), "lazy (materialized by first sink)")
-      }
+      stages ++= concurrently(Seq(
+        () => Seq(stage("quality_metrics") {
+          val r = Quality.report(li, Seq("l_quantity", "l_extendedprice"), CoreQueries.violationRules)
+          quality = Some(r)
+          (r.totalRows, f"score=${r.qualityScore}%.2f dups=${r.duplicateCount}")
+        }),
+        () => {
+          // clean + derive (D1–D3); a failed clean leaves nothing to
+          // derive, so only quality_csv runs downstream of it
+          val clean = stage("clean_derive") {
+            val cleaned = Cleaning.iqrFilter(
+              Cleaning.applyRules(li, CoreQueries.cleanRules), "l_extendedprice", exact = false)
+            enriched = Some(cleaned
+              .withColumn("quantity_bucket",
+                Features.bucketize(col("l_quantity"), CoreQueries.bucketSplits, CoreQueries.bucketLabels))
+              .withColumn("price_per_unit",
+                Features.guardedDiv(col("l_extendedprice"), col("l_quantity")))
+              .withColumn("discount_pct",
+                Features.guardedPct(col("l_extendedprice") * col("l_discount"), col("l_extendedprice")))
+              .cache())
+            ((-1L), "lazy (materialized by sample_load)")
+          }
+          // sample-load: the reference's 1%-sample Postgres path
+          // (src/main.py:147-188) with a parquet destination
+          clean +: overEnriched("sample_load") { e =>
+            val sampled = e.sample(withReplacement = false, 0.01, seed = 42).limit(1000)
+            (parquetCounted(sampled, s"$outDir/sample_load", guard), "1% seeded sample, 1000-row cap")
+          }.map(_()).toSeq
+        })).flatten
 
-      // sample-load: the reference's 1%-sample Postgres path
-      // (src/main.py:147-188) with a parquet destination
-      stage("sample_load") {
-        val sampled = enriched.sample(withReplacement = false, 0.01, seed = 42).limit(1000)
-        (parquetCounted(sampled, s"$outDir/sample_load", guard), "1% seeded sample, 1000-row cap")
-      }
-
-      stage("supplier_stats") {
-        val agg = enriched.groupBy("l_suppkey").agg(
-          count(lit(1)).as("total_lines"),
-          Det.dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("total_revenue"),
-          Det.davg(col("l_quantity")).as("avg_quantity"),
-          Det.davg(col("l_extendedprice")).as("avg_price"),
-          Det.davg(col("l_discount")).as("avg_discount"))
-        (parquetCounted(agg, s"$outDir/supplier_stats", guard), "A1 analog")
-      }
-
-      stage("bucket_stats") {
-        val agg = enriched.groupBy("quantity_bucket").agg(
-          count(lit(1)).as("total_lines"),
-          Det.davg(col("l_extendedprice")).as("avg_price"),
-          Det.davg(col("l_quantity")).as("avg_quantity"),
-          Det.ravg(col("price_per_unit")).as("avg_price_per_unit"))
-        (parquetCounted(agg, s"$outDir/bucket_stats", guard), "A2 analog")
-      }
-
-      stage("quality_csv") {
-        import spark.implicits._
-        val q = quality.get
-        // admit like every other pipeline write (trivially: a 1-row local
-        // frame) so "every EP1 write passes the guard" holds literally
-        val df = graft.engine.PlanGuard.admit(
-          Seq((dir, q.totalRows, q.duplicateCount, q.qualityScore))
-            .toDF("dir", "total_rows", "duplicate_count", "quality_score"), guard)
-        Sinks.csv(df, s"$outDir/quality_report", singleFile = true)
-        // parquet copy backs the Ddl.pipeline_quality catalog table
-        Sinks.parquet(df, s"$outDir/pipeline_quality")
-        (1L, "quality metrics CSV + parquet")
-      }
-
-      // warehouse summary append — the reference's primary sink
-      // (src/main.py:212-227 inserts per-run summary stats into the
-      // daily_trip_stats Postgres table). Optional: runs only when a JDBC
-      // config is supplied; failure isolates like any stage.
-      jdbc.foreach { j =>
-        stage("summary_jdbc") {
-          val summary = graft.engine.PlanGuard.admit(enriched.agg(
+      // phase B: the other sinks at once, over the built cache; only
+      // quality_csv needs phase A's report
+      stages ++= concurrently(Seq(
+        overEnriched("supplier_stats") { e =>
+          val agg = e.groupBy("l_suppkey").agg(
+            count(lit(1)).as("total_lines"),
+            Det.dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("total_revenue"),
+            Det.davg(col("l_quantity")).as("avg_quantity"),
+            Det.davg(col("l_extendedprice")).as("avg_price"),
+            Det.davg(col("l_discount")).as("avg_discount"))
+          (parquetCounted(agg, s"$outDir/supplier_stats", guard), "A1 analog")
+        },
+        overEnriched("bucket_stats") { e =>
+          val agg = e.groupBy("quantity_bucket").agg(
+            count(lit(1)).as("total_lines"),
+            Det.davg(col("l_extendedprice")).as("avg_price"),
+            Det.davg(col("l_quantity")).as("avg_quantity"),
+            Det.ravg(col("price_per_unit")).as("avg_price_per_unit"))
+          (parquetCounted(agg, s"$outDir/bucket_stats", guard), "A2 analog")
+        },
+        Some(() => stage("quality_csv") {
+          import spark.implicits._
+          val q = quality.get
+          // admit like every other pipeline write (trivially: a 1-row local
+          // frame) so "every EP1 write passes the guard" holds literally
+          val df = graft.engine.PlanGuard.admit(
+            Seq((dir, q.totalRows, q.duplicateCount, q.qualityScore))
+              .toDF("dir", "total_rows", "duplicate_count", "quality_score"), guard)
+          Sinks.csv(df, s"$outDir/quality_report", singleFile = true)
+          // parquet copy backs the Ddl.pipeline_quality catalog table
+          Sinks.parquet(df, s"$outDir/pipeline_quality")
+          (1L, "quality metrics CSV + parquet")
+        }),
+        // warehouse summary append — the reference's primary sink
+        // (src/main.py:212-227 inserts per-run summary stats into the
+        // daily_trip_stats Postgres table). Optional: runs only when a JDBC
+        // config is supplied; failure isolates like any stage.
+        jdbc.flatMap(j => overEnriched("summary_jdbc") { e =>
+          val summary = graft.engine.PlanGuard.admit(e.agg(
             count(lit(1)).as("total_lines"),
             Det.dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("total_revenue"),
             Det.davg(col("l_quantity")).as("avg_quantity"),
@@ -164,10 +206,9 @@ object Pipeline {
           Sinks.jdbc(summary, j.url, "PIPELINE_SUMMARY", j.user, j.password,
             batchsize = jdbcBatchSize, columnTypes = Some("dir VARCHAR(256)"))
           (1L, s"summary appended to ${j.host}:${j.port}/${j.database}")
-        }
-      }
+        })).flatten)
     } finally {
-      enriched.unpersist() // C2
+      enriched.foreach(_.unpersist()) // C2
     }
     DirReport(dir, stages.toSeq)
   }

@@ -59,12 +59,16 @@ object Reports {
       .toDF("object", "size_bytes")
   }
 
-  /** Full EP2 run: write all three reports as CSV under `reportsDir`. */
+  /** Full EP2 run: write all four reports as CSV under `reportsDir`.
+    * The four writes are independent and run at the same time (the
+    * inventory lists only `artifactsDir`, which is complete before EP2
+    * starts). Every write has finished before this returns or rethrows
+    * the first failure, so no report job outlives the call. */
   def generate(spark: SparkSession, dataDir: String, artifactsDir: String,
-               reportsDir: String): Unit = {
-    Sinks.csv(summary(spark, artifactsDir), s"$reportsDir/summary", singleFile = true)
-    Sinks.csv(analysis(spark, dataDir), s"$reportsDir/analysis", singleFile = true)
-    Sinks.csv(hourlyDemand(spark, dataDir), s"$reportsDir/hourly_demand", singleFile = true)
-    Sinks.csv(storageInventory(spark, artifactsDir), s"$reportsDir/inventory", singleFile = true)
-  }
+               reportsDir: String): Unit =
+    Pipeline.concurrently(Seq(
+      () => Sinks.csv(summary(spark, artifactsDir), s"$reportsDir/summary", singleFile = true),
+      () => Sinks.csv(analysis(spark, dataDir), s"$reportsDir/analysis", singleFile = true),
+      () => Sinks.csv(hourlyDemand(spark, dataDir), s"$reportsDir/hourly_demand", singleFile = true),
+      () => Sinks.csv(storageInventory(spark, artifactsDir), s"$reportsDir/inventory", singleFile = true)))
 }

@@ -42,8 +42,8 @@ class CleaningSpec extends AnyFunSuite {
 
   test("exact and approx quartiles agree on small data") {
     val df = (1 to 1000).map(_.toDouble).toDF("x")
-    val (e1, e3) = Cleaning.quartilesExact(df, "x")
-    val (a1, a3) = Cleaning.quartilesApprox(df, "x")
+    val (e1, e3) = Cleaning.quartilesExact(df, "x").get
+    val (a1, a3) = Cleaning.quartilesApprox(df, "x").get
     assert(math.abs(e1 - a1) <= 1.0 && math.abs(e3 - a3) <= 1.0)
   }
 }

@@ -94,6 +94,18 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(histIdentity.count() == hist.count())
   }
 
+  test("IQR filter: an empty or all-null column has no quartiles and cleans to empty (exact and approx)") {
+    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("x", DoubleType))))
+    val allNull = Seq(Option.empty[Double], None, None).toDF("x")
+    for ((df, what) <- Seq(empty -> "empty", allNull -> "all-null")) {
+      assert(Cleaning.quartilesExact(df, "x").isEmpty, what)
+      assert(Cleaning.quartilesApprox(df, "x").isEmpty, what)
+      for (exact <- Seq(true, false))
+        assert(Cleaning.iqrFilter(df, "x", exact = exact).count() == 0, s"$what exact=$exact")
+    }
+  }
+
   test("SCD-2 + sessionization: empty changelog, empty facts, and empty events are total") {
     val emptyChg = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(Seq(StructField("k", LongType), StructField("eff", TimestampType),

@@ -1,8 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.io.{Ddl, FileUtils, Sinks}
@@ -41,6 +44,14 @@ class PipelineSpec extends AnyFunSuite {
     (r, m, d)
   }
 
+  /** A new month directory holding the smoke corpus's lineitem, passed
+    * through `f`. */
+  private def monthDir(prefix: String)(f: DataFrame => DataFrame): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    f(graft.model.Tables.lineitem(spark, TestSpark.sfDir)).write.parquet(s"$d/lineitem.parquet")
+    d
+  }
+
   test("pipeline runs every stage green and writes all artifacts") {
     assert(reports.size == 1 && reports.head.ok,
       reports.head.stages.filterNot(_.ok).mkString("; "))
@@ -49,6 +60,11 @@ class PipelineSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$arts/$a").count() > 0, s"$a empty")
     val q = spark.read.option("header", "true").csv(s"$arts/quality_report").collect()
     assert(q.length == 1 && q(0).getAs[String]("quality_score").toDouble >= 0)
+  }
+
+  test("stage results keep the declared order, not the order the branches finish in") {
+    assert(reports.head.stages.map(_.stage) == Seq("scan", "schema_gate", "quality_metrics",
+      "clean_derive", "sample_load", "supplier_stats", "bucket_stats", "quality_csv"))
   }
 
   test("stage rows come from the write job itself — no post-sink re-scan") {
@@ -118,6 +134,38 @@ class PipelineSpec extends AnyFunSuite {
     assert(csv.count() == metrics.size && csv.columns.contains("inputBytes"))
   }
 
+  test("two directories: every stage lands in its own directory's job group") {
+    // each directory's branches run on threads started under its group;
+    // a thread reused from the first directory would carry the first
+    // group into the second
+    val other = monthDir("graft-month")(identity)
+    val out = Files.createTempDirectory("graft-two").toString
+    val (reports, metrics) = Pipeline.runInstrumented(spark, Seq(TestSpark.sfDir, other), out)
+    assert(reports.forall(_.ok), reports.flatMap(_.stages.filterNot(_.ok)).mkString("; "))
+    val byGroup = metrics.groupBy(_.group).map { case (g, rows) => g -> rows.map(_.name).toSet }
+    assert(byGroup.keySet == Set("graft-pipeline-sf0.001", s"graft-pipeline-${other.replaceAll(".*/", "")}"),
+      s"groups=${byGroup.keySet}")
+    // same data, same jobs: each group holds every stage of its own run,
+    // its sink writes included
+    assert(byGroup.values.toSet.size == 1, s"groups ran different stages: $byGroup")
+    assert(byGroup.values.head.exists(_.startsWith("parquet at Sinks.scala")), byGroup)
+  }
+
+  test("a month whose rows all fail the clean rules completes, and the next month still runs") {
+    // every l_discount outside [0, 0.08]: the quartile pass sees no row
+    val cleanedAway = monthDir("graft-allclean")(_.withColumn("l_discount", lit(0.5)))
+    val out = Files.createTempDirectory("graft-allclean-out").toString
+    val (reports, _) = Pipeline.runInstrumented(spark, Seq(cleanedAway, TestSpark.sfDir), out)
+    assert(reports.size == 2)
+    val (empty, good) = (reports(0), reports(1))
+    assert(empty.ok, empty.stages.filterNot(_.ok).mkString("; "))
+    val rows = empty.stages.map(s => s.stage -> s.rows).toMap
+    assert(rows("quality_metrics") > 0 && rows("supplier_stats") == 0 && rows("bucket_stats") == 0)
+    assert(good.ok, good.stages.filterNot(_.ok).mkString("; "))
+    for (a <- Seq("supplier_stats", "bucket_stats", "sample_load"))
+      assert(spark.read.parquet(s"$out/sf0.001/$a").count() > 0, s"$a empty")
+  }
+
   test("pipeline summary appends to the warehouse when JDBC is configured (reference primary sink)") {
     val dbDir = Files.createTempDirectory("graft-pipe-derby").toString
     val jdbc = graft.engine.Config.Jdbc("localhost", 5432, "wh", "app", "",
@@ -147,6 +195,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(hourly.count() == 24) // every hour of day present in the corpus
     val inv = spark.read.option("header", "true").csv(s"$reportsDir/inventory")
     assert(inv.count() > 0) // at least the parquet artifacts are inventoried
+  }
+
+  test("no report write outlives Reports.generate, even when one report fails") {
+    val noArtifacts = Files.createTempDirectory("graft-noarts").toString // no supplier_stats
+    val reportsDir = Files.createTempDirectory("graft-reports-fail").toString
+    intercept[AnalysisException](Reports.generate(spark, TestSpark.sfDir, noArtifacts, reportsDir))
+    ListenerBusDrain(spark.sparkContext) // the status store reads its own queue
+    val active = spark.sparkContext.statusTracker.getActiveJobIds()
+    assert(active.isEmpty, s"jobs still running after generate threw: ${active.toSeq}")
+    for (r <- Seq("analysis", "hourly_demand", "inventory"))
+      assert(Files.exists(Paths.get(reportsDir, r, "_SUCCESS")), s"$r was not written")
   }
 
   test("DDL (S6): catalog tables create over artifact locations, idempotently") {

@@ -21,7 +21,9 @@ import graft.queries.CoreQueries
   * Phase A reads only lineitem. `clean_derive` is the IQR quartile pass
   * plus the lazy derive (D1–D3); `sample_load` builds the enriched cache
   * on its own, so that phase B's sinks all read a finished cache.
-  * `quality_csv` is the one sink that needs phase A's quality report. Each
+  * `quality_csv` is the one sink that needs phase A's quality report. If
+  * `sample_load` fails, phase B runs its sinks one after another instead,
+  * so that exactly one of them builds the cache. Each
   * branch runs on its own driver thread ([[concurrently]]); the stage
   * results keep the order listed above, whatever order the branches
   * finish in.
@@ -160,8 +162,10 @@ object Pipeline {
         })).flatten
 
       // phase B: the other sinks at once, over the built cache; only
-      // quality_csv needs phase A's report
-      stages ++= concurrently(Seq(
+      // quality_csv needs phase A's report. A failed sample_load may have
+      // left the cache unbuilt: the sinks then run one after another, so
+      // the first reader builds it alone and the others read it built.
+      val phaseB = Seq(
         overEnriched("supplier_stats") { e =>
           val agg = e.groupBy("l_suppkey").agg(
             count(lit(1)).as("total_lines"),
@@ -206,7 +210,9 @@ object Pipeline {
           Sinks.jdbc(summary, j.url, "PIPELINE_SUMMARY", j.user, j.password,
             batchsize = jdbcBatchSize, columnTypes = Some("dir VARCHAR(256)"))
           (1L, s"summary appended to ${j.host}:${j.port}/${j.database}")
-        })).flatten)
+        })).flatten
+      stages ++= (if (stages.exists(s => s.stage == "sample_load" && s.ok)) concurrently(phaseB)
+                  else phaseB.map(_()))
     } finally {
       enriched.foreach(_.unpersist()) // C2
     }

@@ -26,9 +26,10 @@ object Reports {
   /** Trips-analysis analog: the reference's multi-key GROUP BY report SQL
     * (src/main.py:332-341), served by Catalyst over the raw corpus view. */
   def analysis(spark: SparkSession, dataDir: String): DataFrame = {
-    // register only the queried view: registerAll re-reads every table's
-    // footer (10 driver-side file opens) per call — needless here, and at
-    // cluster scale each would be a catalog/listing round-trip
+    // register only the queried view: registerAll loads every table (10
+    // file stats per call, and a footer read the first time each file
+    // version is loaded) — needless here, and at cluster scale each would
+    // be a catalog/listing round-trip
     Tables.register(spark, dataDir, "lineitem")
     spark.sql(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS total_lines,

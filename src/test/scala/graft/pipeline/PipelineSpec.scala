@@ -2,9 +2,11 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -137,13 +139,15 @@ class PipelineSpec extends AnyFunSuite {
   test("two directories: every stage lands in its own directory's job group") {
     // each directory's branches run on threads started under its group;
     // a thread reused from the first directory would carry the first
-    // group into the second
-    val other = monthDir("graft-month")(identity)
+    // group into the second. Both months are fresh directories, so both
+    // scans infer their schema (a table file loaded earlier would skip
+    // that job and the two stage sets would differ)
+    val months = Seq(monthDir("graft-month-a")(identity), monthDir("graft-month-b")(identity))
     val out = Files.createTempDirectory("graft-two").toString
-    val (reports, metrics) = Pipeline.runInstrumented(spark, Seq(TestSpark.sfDir, other), out)
+    val (reports, metrics) = Pipeline.runInstrumented(spark, months, out)
     assert(reports.forall(_.ok), reports.flatMap(_.stages.filterNot(_.ok)).mkString("; "))
     val byGroup = metrics.groupBy(_.group).map { case (g, rows) => g -> rows.map(_.name).toSet }
-    assert(byGroup.keySet == Set("graft-pipeline-sf0.001", s"graft-pipeline-${other.replaceAll(".*/", "")}"),
+    assert(byGroup.keySet == months.map(m => s"graft-pipeline-${m.replaceAll(".*/", "")}").toSet,
       s"groups=${byGroup.keySet}")
     // same data, same jobs: each group holds every stage of its own run,
     // its sink writes included
@@ -164,6 +168,38 @@ class PipelineSpec extends AnyFunSuite {
     assert(good.ok, good.stages.filterNot(_.ok).mkString("; "))
     for (a <- Seq("supplier_stats", "bucket_stats", "sample_load"))
       assert(spark.read.parquet(s"$out/sf0.001/$a").count() > 0, s"$a empty")
+  }
+
+  test("a failed sample_load leaves one sink to build the cache, and every other stage lands") {
+    val out = Files.createTempDirectory("graft-nosample").toString
+    val key = "spark.sql.sources.commitProtocolClass"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[RefuseSampleLoad].getName)
+    // jobs that compute a cached RDD as their result: the enriched cache's
+    // builds (a reader's stage ends above the cache instead)
+    val builds = new AtomicInteger
+    val cacheBuilds = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.headOption.exists(_.storageLevel.isValid))) builds.incrementAndGet()
+    }
+    PipelineMetrics.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(cacheBuilds)
+    val report =
+      try Pipeline.processDir(spark, TestSpark.sfDir, out)
+      finally {
+        before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        PipelineMetrics.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(cacheBuilds)
+      }
+    val byStage = report.stages.map(s => s.stage -> s).toMap
+    assert(!byStage("sample_load").ok && byStage("sample_load").detail.contains("refused"),
+      byStage("sample_load"))
+    assert(report.stages.filterNot(_.stage == "sample_load").forall(_.ok),
+      report.stages.filterNot(_.ok).mkString("; "))
+    assert(builds.get == 1, s"${builds.get} jobs built the enriched cache")
+    def lines(a: String) = spark.read.parquet(s"$out/$a").select("total_lines").collect().map(_.getLong(0)).sum
+    assert(lines("supplier_stats") == lines("bucket_stats") && lines("bucket_stats") > 0,
+      s"supplier_stats ${lines("supplier_stats")} vs bucket_stats ${lines("bucket_stats")}")
   }
 
   test("pipeline summary appends to the warehouse when JDBC is configured (reference primary sink)") {
@@ -273,4 +309,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(FileUtils.listObjects(d, "sub") == Seq("sub/y.txt"))
     assert(FileUtils.listObjects("/nonexistent-root").isEmpty)
   }
+}
+
+/** Commit protocol that refuses every write into a `sample_load` directory
+  * at job setup, before the write runs a job; every other write commits
+  * as usual. */
+class RefuseSampleLoad(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: JobContext): Unit =
+    if (path.endsWith("/sample_load")) throw new java.io.IOException(s"write refused: $path")
+    else super.setupJob(jobContext)
 }

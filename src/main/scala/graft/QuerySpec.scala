@@ -19,6 +19,7 @@ final case class QuerySpec(
     oracle: Option[String],
     order: Seq[Column] = Nil,
     benchRun: Option[(SparkSession, String) => DataFrame] = None,
+    parity: Option[Parity] = None,
     prepare: Option[(SparkSession, String) => Unit] = None) {
 
   /** Oracle-checked plan: `body`, plus the declared [[oracleOrder]] as a
@@ -46,9 +47,20 @@ final case class QuerySpec(
   /** Attach a production-mode variant that changes SEMANTICS, not just
     * ordering: sketches instead of exact percentiles, xxhash64 instead of
     * md5 draws, row-hash dedup instead of full-width distinct. A variant
-    * that only drops the oracle sort is an [[oracleOrder]] instead. */
-  def withBench(fn: (SparkSession, String) => DataFrame): QuerySpec =
-    copy(benchRun = Some(fn))
+    * that only drops the oracle sort is an [[oracleOrder]] instead.
+    *
+    * Where the variant shares its prefix or suffix with `body`, both are
+    * one private helper in the query's own file that takes a named switch
+    * (`hashed`, `sketch`, `maxDf`, …): `body` calls it with the oracle
+    * setting and `fn` with the production one, so the shared code is
+    * written once and cannot drift. `fn` itself stays a lambda in that
+    * file: [[production]] returns it as registered, and callers name a
+    * query's module from its class.
+    *
+    * `parity` declares how the variant's rows relate to `run`'s; the
+    * registry-wide ProductionParitySpec checks every declaration. */
+  def withBench(parity: Parity)(fn: (SparkSession, String) => DataFrame): QuerySpec =
+    copy(benchRun = Some(fn), parity = Some(parity))
 
   /** Attach an UNTIMED state-init hook: [[graft.Bench]] runs it once per
     * bench invocation before the timed passes, so a query that serves from
@@ -70,4 +82,31 @@ object QuerySpec {
   def rowsOnly(name: String, doc: String)(
       body: (SparkSession, String) => DataFrame): QuerySpec =
     QuerySpec(name, doc, body, None)
+}
+
+/** How a [[QuerySpec.withBench]] variant's rows relate to the rows of the
+  * oracle-checked `run`. The declaration is data; ProductionParitySpec
+  * holds the check, at sf0.001. */
+sealed trait Parity
+
+object Parity {
+  /** The rows of `run`, as a multiset (the oracle order dropped). */
+  case object Exact extends Parity
+
+  /** `run`'s columns and row count. Rows pair up on every other column,
+    * which must be equal, and each of `cols` is within
+    * `abs + rel·|run's value|` of `run`'s. Use only a bound an existing
+    * spec already pins (HLL ≤ 2%, a binned quantile within one bin). */
+  final case class Approx(cols: Seq[String], rel: Double = 0.0, abs: Double = 0.0)
+      extends Parity
+
+  /** A different draw, hash or output form: each of `cols` is a column of
+    * both outputs, and the two projections onto `cols` are equal as
+    * multisets (per-group counts, when `cols` are the group keys). With no
+    * `cols`, that is the row count. */
+  final case class Structural(cols: String*) extends Parity
+
+  /** A different draw whose rows and counts share nothing with `run`'s:
+    * only `run`'s column names must agree. */
+  case object SameColumns extends Parity
 }

@@ -36,11 +36,6 @@ object PostgresDdl {
   def schemaString(df: DataFrame, columnTypes: Option[String] = None): String =
     JdbcUtils.schemaString(dialect, df.schema, caseSensitive = false, columnTypes)
 
-  /** Full statement form, for logging/inspection. */
-  def createTableSql(df: DataFrame, table: String,
-                     columnTypes: Option[String] = None): String =
-    s"CREATE TABLE $table (${schemaString(df, columnTypes)})"
-
   /** Reference-contract `createTableColumnTypes` per table
     * (scripts/create_tables.sql:10-53): every column whose Postgres type
     * the dialect's DEFAULT mapping would weaken gets an explicit type.

@@ -154,11 +154,4 @@ object Expectations {
       .select(explode(array(rows: _*)).as("r"))
       .select(col("r.*"))
   }
-
-  /** Bridge to the engine's scoring path: a suite's expectations as
-    * [[Quality.Rule]] violation predicates, so one declaration feeds both
-    * the pass/fail report here and Quality's A8/A9 violation-count +
-    * score machinery. */
-  def asRules(suite: Seq[Expectation]): Seq[Quality.Rule] =
-    suite.map(e => Quality.Rule(e.name, e.violation))
 }

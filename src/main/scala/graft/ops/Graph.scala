@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over pair lists — the numeric companion to
@@ -34,28 +34,40 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(beta > 0 && beta < 1, s"beta must be in (0,1), got $beta")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
+    sweeps(pairs, iters, checkpointEvery, init = lit(1.0),
+      contribution = col("rank") / col("deg"),
+      damped = lit(1.0 - beta) + lit(beta) * coalesce(col("inflow"), lit(0.0)))
+  }
+
+  /** The loop both PageRank forms share: the symmetric edge list, the
+    * degree table, and `iters` sweeps of a rank vector whose lineage is
+    * truncated every `checkpointEvery`. The forms differ only in their
+    * arithmetic: the `init` rank, the per-edge `contribution` (of `rank`
+    * and `deg`), and the `damped` next rank (of the summed `inflow`, null
+    * for a node nothing flows into).
+    *
+    * The rank vector CARRIES the (static) degree column (r18): the old
+    * loop joined `deg` back in every iteration — one whole join per sweep
+    * whose only purpose was re-attaching a value already keyed by the same
+    * id. Same per-edge contribution, same grouping, identical output
+    * (GraphSpec conservation + fixed-point parity pins). */
+  private def sweeps(pairs: DataFrame, iters: Int, checkpointEvery: Int, init: Column,
+                     contribution: Column, damped: Column): DataFrame = {
     val edges = pairs
       .select(col("id1").cast("long").as("src"), col("id2").cast("long").as("dst"))
       .unionByName(pairs.select(col("id2").cast("long").as("src"),
         col("id1").cast("long").as("dst")))
       .localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
-    // The rank vector CARRIES the (static) degree column (r18): the old
-    // loop joined `deg` back in every iteration — one whole join per
-    // sweep whose only purpose was re-attaching a value already keyed by
-    // the same id. Same per-edge contribution rank/deg, same grouping,
-    // identical output (GraphSpec conservation + fixed-point parity pins).
-    var ranks = deg.select(col("src").as("id"), lit(1.0).as("rank"), col("deg"))
+    var ranks = deg.select(col("src").as("id"), init.as("rank"), col("deg"))
     for (i <- 1 to iters) {
       val inflow = edges
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+        .select(col("dst").as("id"), contribution.as("c"))
         .groupBy("id").agg(sum("c").as("inflow"))
       val next = deg.select(col("src").as("id"), col("deg"))
         .join(inflow, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1.0 - beta) + lit(beta) * coalesce(col("inflow"), lit(0.0))).as("rank"),
-          col("deg"))
+        .select(col("id"), damped.as("rank"), col("deg"))
       ranks = if (i % checkpointEvery == 0 || i == iters) next.localCheckpoint() else next
     }
     ranks.select(col("id"), col("rank"))
@@ -230,31 +242,12 @@ object Graph {
     require(betaNum > 0 && betaNum < betaDen, s"need 0 < betaNum < betaDen, got $betaNum/$betaDen")
     require(one % betaDen == 0, s"betaDen ($betaDen) must divide one ($one) for an exact teleport")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val edges = pairs
-      .select(col("id1").cast("long").as("src"), col("id2").cast("long").as("dst"))
-      .unionByName(pairs.select(col("id2").cast("long").as("src"),
-        col("id1").cast("long").as("dst")))
-      .localCheckpoint()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
+    // exact integer arithmetic is order-independent, so the output is
+    // bit-identical in any engine (g1's DuckDB oracle pins it)
     val teleport = (one / betaDen) * (betaDen - betaNum)
-    // degree rides the rank vector — one fewer join per sweep (see
-    // [[pageRank]]); exact integer arithmetic is order-independent, so
-    // the output is bit-identical (g1's DuckDB oracle pins it)
-    var ranks = deg.select(col("src").as("id"), lit(one).as("rank"), col("deg"))
-    for (i <- 1 to iters) {
-      val inflow = edges
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), expr("rank DIV deg").as("c"))
-        .groupBy("id").agg(sum("c").as("inflow"))
-      val next = deg.select(col("src").as("id"), col("deg"))
-        .join(inflow, Seq("id"), "left")
-        .select(col("id"),
-          (lit(teleport) + expr(s"(coalesce(inflow, CAST(0 AS BIGINT)) * $betaNum) DIV $betaDen"))
-            .as("rank"),
-          col("deg"))
-      ranks = if (i % checkpointEvery == 0 || i == iters) next.localCheckpoint() else next
-    }
-    ranks.select(col("id"), col("rank"))
+    sweeps(pairs, iters, checkpointEvery, init = lit(one),
+      contribution = expr("rank DIV deg"),
+      damped = lit(teleport) + expr(s"(coalesce(inflow, CAST(0 AS BIGINT)) * $betaNum) DIV $betaDen"))
   }
 
   /** Common-neighbor LINK PREDICTION over an undirected pair graph: every

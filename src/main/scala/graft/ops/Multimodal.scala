@@ -116,12 +116,6 @@ object Multimodal {
     }
   }
 
-  /** Typed view of a media DataFrame (schema gate + encoder). */
-  def asMedia(df: DataFrame): Dataset[MediaRow] = {
-    import df.sparkSession.implicits._
-    df.select(col("media_id"), col("kind"), col("payload")).as[MediaRow]
-  }
-
   /** Frame-offset sampling for video payloads: every `stride`-th block
     * offset as a frame index — pure Catalyst (sequence/transform), no
     * decode needed for manifest-level planning. */

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.{rowsOnly, sql}
 import graft.model.Tables
 import graft.ops.{Cleaning, Det, Features, Quality}
@@ -140,7 +140,7 @@ object CoreQueries {
         Cleaning.iqrFilter(Tables.lineitem(s, d), "l_extendedprice", k = 1.5, exact = true)
           .select("l_orderkey", "l_linenumber", "l_extendedprice")
           .orderBy("l_orderkey", "l_linenumber", "l_extendedprice")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: single-pass mergeable quantile sketch, unsorted output
       Cleaning.iqrFilter(Tables.lineitem(s, d), "l_extendedprice", k = 1.5, exact = false)
         .select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -298,7 +298,7 @@ object CoreQueries {
           round(expr("percentile(l_extendedprice, 0.25)"), 4).as("q25"),
           round(expr("percentile(l_extendedprice, 0.50)"), 4).as("q50"),
           round(expr("percentile(l_extendedprice, 0.75)"), 4).as("q75"))
-    }.withBench { (s, d) =>
+    }.withBench(Parity.SameColumns) { (s, d) =>
       // production: one-pass mergeable sketch, constant memory per partition
       // (exact percentile buffers every value in one agg buffer — OOM at scale)
       Tables.lineitem(s, d).agg(
@@ -335,7 +335,7 @@ object CoreQueries {
           .select(col("total_rows"), col("distinct_rows"),
             (col("total_rows") - col("distinct_rows")).as("duplicate_count"))
       }
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: shuffle an 8-byte xxhash64 per row instead of the full
       // row width (collision probability ~n²/2⁶⁵ — negligible as a metric)
       // (r19: a widen was A/B-measured 1.28× SLOWER — the count_distinct

@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.{rowsOnly, sql}
 import graft.model.Tables
 import graft.ops.{Decontam, Dedup}
@@ -167,6 +168,86 @@ object DedupQueries {
       })
   }
 
+  /** o13's split counts. `served` is the production form: labels read
+    * back from the persisted artifact, xxhash64 split buckets. Otherwise
+    * the labels are built in-query and the draw is the md5 hex prefix. */
+  private def clusterHoldout(s: SparkSession, d: String, served: Boolean): DataFrame = {
+    val docs = if (served) Tables.documents(s, d) else Tables.widened(s, d, "documents")
+    // label table: at 100 TB this is the PERSISTED IncrementalIngest
+    // label artifact, not an in-query closure — the split then costs
+    // one left join against a sliver + a hash per doc
+    val labels =
+      if (served) s.read.parquet(s"${PersistedState.ensureFullLabels(s, d)}/labels")
+      else Dedup.connectedComponents(Dedup.minhashNearDup(docs))
+    val g = docs.select("doc_id").join(labels, Seq("doc_id"), "left")
+      .select(coalesce(col("cluster"), col("doc_id")).as("grp"))
+    val train =
+      if (served) pmod(xxhash64(col("grp")), lit(256L)) < 204
+      else substring(md5(col("grp").cast("string")), 1, 2) < "cc"
+    g.select(when(train, "train").otherwise("test").as("split"), col("grp"))
+      .groupBy("split")
+      .agg(count(lit(1)).as("n_docs"), countDistinct(col("grp")).as("n_groups"))
+  }
+
+  /** dd10's cluster-size histogram; `maxDf` is the production hot-shingle
+    * cap on the pair stage (None in the oracle plan). */
+  private def clusterSizes(s: SparkSession, d: String, maxDf: Option[Long]): DataFrame =
+    Dedup.connectedComponents(
+        Dedup.minhashNearDup(Tables.widened(s, d, "documents"), maxDf = maxDf))
+      .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
+      .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
+      .select(col("cluster_size"),
+        col("n_clusters"),
+        (col("cluster_size") * col("n_clusters")).as("n_docs"))
+
+  /** dd11's per-source waste; `maxDf` as in [[clusterSizes]]. */
+  private def wastedTokens(s: SparkSession, d: String, maxDf: Option[Long]): DataFrame = {
+    val docs = Tables.widened(s, d, "documents")
+    // non-survivors are a cluster-membership sliver; joining them
+    // back to documents is an AQE-sized join (sliver vs corpus —
+    // broadcast when small), and the per-source totals reuse one
+    // corpus scan. Token metering matches t1 (whitespace split).
+    val nonSurvivors = Dedup.connectedComponents(Dedup.minhashNearDup(docs, maxDf = maxDf))
+      .filter(col("doc_id") =!= col("cluster"))
+      .select("doc_id")
+    val waste = docs.join(nonSurvivors, Seq("doc_id"))
+      .groupBy("source").agg(
+        count(lit(1)).as("n_dup_docs"),
+        sum(graft.ops.TextOps.tokenCount(col("text"))).as("wasted_tokens"))
+    docs.groupBy("source").agg(
+        count(lit(1)).as("n_docs"),
+        sum(graft.ops.TextOps.tokenCount(col("text"))).as("total_tokens"))
+      .join(waste, Seq("source"), "left")
+      .select(col("source"), col("n_docs"), col("total_tokens"),
+        coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"),
+        coalesce(col("wasted_tokens"), lit(0L)).as("wasted_tokens"))
+  }
+
+  /** dd9's overlap matrix; `hashed` shuffles xxhash64(prefix) in place of
+    * the 16-token prefix string (production). */
+  private def sourceOverlap(s: SparkSession, d: String, hashed: Boolean): DataFrame = {
+    // pre-filter to prefixes with frequency ≥ 2 BEFORE self-joining:
+    // the frequency agg is one shuffle on the prefix key, and the
+    // surviving candidate sliver (dup groups only) is what self-joins
+    // — the full corpus never meets itself. Group sizes are dup-
+    // cluster-bounded, so the join output is Σ C(group,2), not n².
+    val pre = array_join(slice(split(col("text"), " "), 1, 16), " ")
+    val docs = Tables.documents(s, d).select(
+      col("doc_id"), col("source"), (if (hashed) xxhash64(pre) else pre).as("pre"))
+    val shared = docs.groupBy("pre").count()
+      .filter(col("count") > 1).select("pre")
+    val cand = docs.join(shared, "pre")
+    cand.as("a").join(cand.as("b"),
+        col("a.pre") === col("b.pre") && col("a.doc_id") < col("b.doc_id"))
+      .select(
+        least(col("a.source"), col("b.source")).as("source_a"),
+        greatest(col("a.source"), col("b.source")).as("source_b"),
+        col("a.pre").as("pre"))
+      .groupBy("source_a", "source_b")
+      .agg(count(lit(1)).as("n_pairs"),
+        countDistinct(col("pre")).as("n_prefixes"))
+  }
+
   val all: Seq[QuerySpec] = Seq(
 
     sql("dd1_exact_dedup",
@@ -179,7 +260,7 @@ object DedupQueries {
           .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
           .select("doc_id", "text", "n_copies")
           .orderBy("doc_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Structural("doc_id", "n_copies")) { (s, d) =>
       // production: group on a 64-bit text hash so the shuffle moves 8 bytes
       // per row instead of the document body; survivors resolved by id
       Tables.documents(s, d)
@@ -194,7 +275,7 @@ object DedupQueries {
       (s, d) =>
         Dedup.minhashNearDup(Tables.widened(s, d, "documents"))
           .orderBy("id1", "id2")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: same plan minus the oracle sort, plus the hot-shingle
       // df-cap (no-op on this corpus, max df 25 ≪ 1000; the guard that
       // bounds bucket sizes at 100 TB — parity pinned in DedupSpec).
@@ -211,7 +292,7 @@ object DedupQueries {
         Dedup.exactJaccardPairs(
           Dedup.shingleDF(Tables.widened(s, d, "documents")), minJaccard = 0.8)
           .orderBy("id1", "id2")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production plan = PPJoin prefix filter + df-cap, NOT the direct
       // shared-shingle join: on a Zipfian vocabulary the direct join's
       // candidate pairs grow quadratically in hot-shingle frequency. The
@@ -320,7 +401,7 @@ object DedupQueries {
         Dedup.containmentPairs(
           Dedup.shingleDF(Tables.widened(s, d, "documents")), minContainment = 0.9)
           .orderBy("id", "in_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: hashed shingles + df-cap — 8-byte join keys, hot
       // buckets bounded; containment only ever under-scores vs exact
       Dedup.containmentPairs(
@@ -337,7 +418,7 @@ object DedupQueries {
       (s, d) =>
         Dedup.connectedComponents(Dedup.minhashNearDup(Tables.widened(s, d, "documents")))
           .orderBy("doc_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       Dedup.connectedComponents(
         Dedup.minhashNearDup(Tables.widened(s, d, "documents"), maxDf = Some(Dedup.DefaultMaxDf)))
     },
@@ -375,37 +456,13 @@ object DedupQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(COUNT(DISTINCT grp) AS BIGINT) AS n_groups
          | FROM g GROUP BY 1 ORDER BY split""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val docs = Tables.widened(s, d, "documents")
-        // label table: at 100 TB this is the PERSISTED IncrementalIngest
-        // label artifact, not an in-query closure — the split then costs
-        // one left join against a sliver + a hash per doc
-        val labels = Dedup.connectedComponents(Dedup.minhashNearDup(docs))
-        val g = docs.select("doc_id").join(labels, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("grp"))
-        g.select(
-          when(substring(md5(col("grp").cast("string")), 1, 2) < "cc", "train")
-            .otherwise("test").as("split"),
-          col("grp"))
-          .groupBy("split")
-          .agg(count(lit(1)).as("n_docs"), countDistinct(col("grp")).as("n_groups"))
-          .orderBy("split")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => clusterHoldout(s, d, served = false)
+    }.oracleOrder("split").withBench(Parity.Structural("split")) { (s, d) =>
       // production: labels served from the PERSISTED artifact (built
       // untimed via prepare) — the split then costs one left join
       // against the label sliver + a hash per doc, which is what a
       // deployment pays; xxhash64 split buckets instead of md5 hex
-      val labels = s.read.parquet(
-        s"${PersistedState.ensureFullLabels(s, d)}/labels")
-      val docs = Tables.documents(s, d)
-      val g = docs.select("doc_id").join(labels, Seq("doc_id"), "left")
-        .select(coalesce(col("cluster"), col("doc_id")).as("grp"))
-      g.select(
-        when(pmod(xxhash64(col("grp")), lit(256L)) < 204, "train")
-          .otherwise("test").as("split"), col("grp"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("grp")).as("n_groups"))
+      clusterHoldout(s, d, served = true)
     }.withPrepare { (s, d) =>
       PersistedState.ensureFullLabels(s, d); ()
     },
@@ -494,7 +551,7 @@ object DedupQueries {
           docs.filter(col("doc_id") % 20 === 7), k = 5)
           .orderBy("doc_id")
       }
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: 8-byte hashed shingles in the broadcast hash table
       // (recall-biased: a collision can only add a flagged doc) — parity
       // vs the string form pinned in DecontamSpec
@@ -513,7 +570,7 @@ object DedupQueries {
           .select(col("id"), col("rank").as("rank_fp"))
           .orderBy(col("rank_fp").desc, col("id"))
           .limit(20)
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Structural()) { (s, d) =>
       // production: plain double arithmetic (no fixed-point bound on node
       // count) over the df-capped pair graph — the 100 TB plan
       graft.ops.Graph.pageRank(
@@ -557,27 +614,12 @@ object DedupQueries {
     sql("dd10_cluster_sizes",
       "Dedup: cluster-size histogram over the near-dup CC clusters — the duplication dashboard (n clusters per size + member mass); two tiny hash aggs over the label sliver",
       clusterSizeOracle) {
-      (s, d) =>
-        graft.ops.Dedup.connectedComponents(
-            Dedup.minhashNearDup(Tables.widened(s, d, "documents")))
-          .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-          .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-          .select(col("cluster_size"),
-            col("n_clusters"),
-            (col("cluster_size") * col("n_clusters")).as("n_docs"))
-          .orderBy("cluster_size")
-    }.withBench { (s, d) =>
+      (s, d) => clusterSizes(s, d, maxDf = None)
+    }.oracleOrder("cluster_size").withBench(Parity.Exact) { (s, d) =>
       // production: dd5's discipline — hot-shingle df-cap in the pair
       // stage (no-op on this corpus, the 100 TB bucket guard; parity
-      // pinned in DedupSpec) and no oracle-only total sort
-      graft.ops.Dedup.connectedComponents(
-          Dedup.minhashNearDup(Tables.widened(s, d, "documents"),
-            maxDf = Some(Dedup.DefaultMaxDf)))
-        .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"),
-          col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs"))
+      // pinned in DedupSpec)
+      clusterSizes(s, d, maxDf = Some(Dedup.DefaultMaxDf))
     },
 
     sql("dd11_wasted_tokens",
@@ -601,48 +643,11 @@ object DedupQueries {
          | CAST(COALESCE(w.wasted_tokens, 0) AS BIGINT) AS wasted_tokens
          | FROM tot t LEFT JOIN waste w ON t.source = w.source
          | ORDER BY t.source""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val docs = Tables.widened(s, d, "documents")
-        // non-survivors are a cluster-membership sliver; joining them
-        // back to documents is an AQE-sized join (sliver vs corpus —
-        // broadcast when small), and the per-source totals reuse one
-        // corpus scan. Token metering matches t1 (whitespace split).
-        val nonSurvivors = graft.ops.Dedup.connectedComponents(
-            Dedup.minhashNearDup(docs))
-          .filter(col("doc_id") =!= col("cluster"))
-          .select("doc_id")
-        val waste = docs.join(nonSurvivors, Seq("doc_id"))
-          .groupBy("source").agg(
-            count(lit(1)).as("n_dup_docs"),
-            sum(graft.ops.TextOps.tokenCount(col("text"))).as("wasted_tokens"))
-        docs.groupBy("source").agg(
-            count(lit(1)).as("n_docs"),
-            sum(graft.ops.TextOps.tokenCount(col("text"))).as("total_tokens"))
-          .join(waste, Seq("source"), "left")
-          .select(col("source"), col("n_docs"), col("total_tokens"),
-            coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"),
-            coalesce(col("wasted_tokens"), lit(0L)).as("wasted_tokens"))
-          .orderBy("source")
-      }
-    }.withBench { (s, d) =>
-      // production: df-capped pair stage + no oracle sort (dd5/dd10's
-      // discipline); the waste/total joins are unchanged
-      val docs = Tables.widened(s, d, "documents")
-      val nonSurvivors = graft.ops.Dedup.connectedComponents(
-          Dedup.minhashNearDup(docs, maxDf = Some(Dedup.DefaultMaxDf)))
-        .filter(col("doc_id") =!= col("cluster"))
-        .select("doc_id")
-      val waste = docs.join(nonSurvivors, Seq("doc_id"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_dup_docs"),
-          sum(graft.ops.TextOps.tokenCount(col("text"))).as("wasted_tokens"))
-      docs.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(graft.ops.TextOps.tokenCount(col("text"))).as("total_tokens"))
-        .join(waste, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("total_tokens"),
-          coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"),
-          coalesce(col("wasted_tokens"), lit(0L)).as("wasted_tokens"))
+      (s, d) => wastedTokens(s, d, maxDf = None)
+    }.oracleOrder("source").withBench(Parity.Exact) { (s, d) =>
+      // production: df-capped pair stage (dd5/dd10's discipline); the
+      // waste/total joins are unchanged
+      wastedTokens(s, d, maxDf = Some(Dedup.DefaultMaxDf))
     },
 
     sql("dd4_simhash_neardup",
@@ -667,7 +672,7 @@ object DedupQueries {
             Dedup.simhash(Tables.documents(s, d), wordHash = Dedup.portableWordHash))
           .withColumn("hamming", col("hamming").cast("long"))
           .orderBy("id1", "id2")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.SameColumns) { (s, d) =>
       // production: same banded plan, xxhash64 word hash (codegen'd, no
       // hex-string decode per token)
       Dedup.simhashNearDup(Dedup.simhash(Tables.documents(s, d)))
@@ -687,51 +692,12 @@ object DedupQueries {
         |       CAST(COUNT(DISTINCT pre) AS BIGINT) AS n_prefixes
         | FROM j GROUP BY source_a, source_b
         | ORDER BY source_a, source_b""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        // pre-filter to prefixes with frequency ≥ 2 BEFORE self-joining:
-        // the frequency agg is one shuffle on the prefix key, and the
-        // surviving candidate sliver (dup groups only) is what self-joins
-        // — the full corpus never meets itself. Group sizes are dup-
-        // cluster-bounded, so the join output is Σ C(group,2), not n².
-        // At 100 TB the prefix key is xxhash64'd to an 8-byte shuffle key
-        // (dd1's width discipline); the oracle keeps the string for
-        // exactness.
-        val docs = Tables.documents(s, d).select(
-          col("doc_id"), col("source"),
-          array_join(slice(split(col("text"), " "), 1, 16), " ").as("pre"))
-        val shared = docs.groupBy("pre").count()
-          .filter(col("count") > 1).select("pre")
-        val cand = docs.join(shared, "pre")
-        cand.as("a").join(cand.as("b"),
-            col("a.pre") === col("b.pre") && col("a.doc_id") < col("b.doc_id"))
-          .select(
-            least(col("a.source"), col("b.source")).as("source_a"),
-            greatest(col("a.source"), col("b.source")).as("source_b"),
-            col("a.pre").as("pre"))
-          .groupBy("source_a", "source_b")
-          .agg(count(lit(1)).as("n_pairs"),
-            countDistinct(col("pre")).as("n_prefixes"))
-          .orderBy("source_a", "source_b")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => sourceOverlap(s, d, hashed = false)
+    }.oracleOrder("source_a", "source_b").withBench(Parity.Exact) { (s, d) =>
       // production: the shuffle key is xxhash64(prefix) — 8 bytes instead
       // of the 16-token string (dd1's width discipline; a 2⁻⁶⁴ collision
-      // could only merge two prefix groups) — and the oracle sort drops
-      val docs = Tables.documents(s, d).select(
-        col("doc_id"), col("source"),
-        xxhash64(array_join(slice(split(col("text"), " "), 1, 16), " ")).as("pre"))
-      val shared = docs.groupBy("pre").count()
-        .filter(col("count") > 1).select("pre")
-      val cand = docs.join(shared, "pre")
-      cand.as("a").join(cand.as("b"),
-          col("a.pre") === col("b.pre") && col("a.doc_id") < col("b.doc_id"))
-        .select(
-          least(col("a.source"), col("b.source")).as("source_a"),
-          greatest(col("a.source"), col("b.source")).as("source_b"),
-          col("a.pre").as("pre"))
-        .groupBy("source_a", "source_b")
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("pre")).as("n_prefixes"))
+      // could only merge two prefix groups)
+      sourceOverlap(s, d, hashed = true)
     },
 
     sql("dd14_dup_downweight_sample",
@@ -750,7 +716,7 @@ object DedupQueries {
           .select(col("doc_id"), col("lang"), col("sz").as("cluster_size"))
           .orderBy("doc_id")
       }
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window.partitionBy("th")
       Tables.documents(s, d)
         .withColumn("th", xxhash64(col("text")))

@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.sql
 import graft.model.Tables
 import graft.ops.Det
@@ -27,6 +28,23 @@ object JoinQueries {
   /** Net revenue per line (same money discipline as CoreQueries). */
   private def revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
   private val revenueSql = "l_extendedprice * (1.0 - l_discount)"
+
+  /** j8's per-band revenue. `grid` is the production grid-bucketized
+    * equality join; otherwise the naive point-in-interval join. */
+  private def bandRevenue(s: SparkSession, d: String, grid: Boolean): DataFrame = {
+    // band bounds via exact-decimal means (Det.davg) so the interval
+    // edges are bit-identical in both engines — a double-sum mean
+    // could flip membership for a row exactly at a boundary
+    val bands = Tables.orders(s, d)
+      .groupBy(col("o_orderpriority").as("band"))
+      .agg((davg(col("o_totalprice")) * 0.8).as("lo"),
+        (davg(col("o_totalprice")) * 1.2).as("hi"))
+    val pts = Tables.orders(s, d).select(col("o_totalprice"))
+    (if (grid) graft.ops.RangeJoin.pointInInterval(pts, bands, "o_totalprice", "lo", "hi", 25000.0)
+     else graft.ops.RangeJoin.pointInIntervalNaive(pts, bands, "o_totalprice", "lo", "hi"))
+      .groupBy("band")
+      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("band_revenue"))
+  }
 
   val all: Seq[QuerySpec] = Seq(
 
@@ -208,33 +226,13 @@ object JoinQueries {
          |SELECT band, COUNT(*) AS n_orders, ${ssum("o_totalprice")} AS band_revenue
          | FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
          | GROUP BY band ORDER BY band""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        // band bounds via exact-decimal means (Det.davg) so the interval
-        // edges are bit-identical in both engines — a double-sum mean
-        // could flip membership for a row exactly at a boundary
-        val bands = Tables.orders(s, d)
-          .groupBy(col("o_orderpriority").as("band"))
-          .agg((davg(col("o_totalprice")) * 0.8).as("lo"),
-            (davg(col("o_totalprice")) * 1.2).as("hi"))
-        val pts = Tables.orders(s, d).select(col("o_totalprice"))
-        graft.ops.RangeJoin.pointInIntervalNaive(pts, bands, "o_totalprice", "lo", "hi")
-          .groupBy("band")
-          .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("band_revenue"))
-          .orderBy("band")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => bandRevenue(s, d, grid = false)
+    }.oracleOrder("band").withBench(Parity.Exact) { (s, d) =>
       // production: the grid-bucketized equality join (RangeJoin scaladoc:
       // the shape that survives millions of intervals where the broadcast
       // nested loop dies); parity with the naive plan pinned in
       // RangeJoinSpec. Width ~ interval length / 4 here.
-      val bands = Tables.orders(s, d)
-        .groupBy(col("o_orderpriority").as("band"))
-        .agg((davg(col("o_totalprice")) * 0.8).as("lo"),
-          (davg(col("o_totalprice")) * 1.2).as("hi"))
-      val pts = Tables.orders(s, d).select(col("o_totalprice"))
-      graft.ops.RangeJoin.pointInInterval(pts, bands, "o_totalprice", "lo", "hi", 25000.0)
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("band_revenue"))
+      bandRevenue(s, d, grid = true)
     },
 
     sql("j10_full_outer",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.sql
 import graft.model.Tables
 import graft.pipeline.DocPipeline
@@ -60,6 +60,41 @@ object LlmPipelineQueries {
         round(avg("quality"), 4).as("avg_quality"))
   }
 
+  /** llm8's per-source data card. `hashed` keys the dup-exposure join
+    * on xxhash64(text) (production: dd1's shuffle-width discipline);
+    * otherwise on the text itself. */
+  private def dataCard(s: org.apache.spark.sql.SparkSession, d: String,
+                       hashed: Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val key = if (hashed) "__th" else "text"
+    val docs =
+      if (hashed) Tables.documents(s, d).withColumn("__th", xxhash64(col("text")))
+      else Tables.documents(s, d)
+    val tc = docs.groupBy(key).agg(count(lit(1)).as("n_copies"))
+    val base = docs.join(tc, key).select(
+      col("source"), col("lang"),
+      graft.ops.TextOps.tokenCount(col("text")).as("n_tokens"),
+      graft.ops.TextOps.qualityScore(col("text"),
+        graft.ops.TextOps.corpusStopwords).as("quality"),
+      when(col("n_copies") > 1, 1L).otherwise(0L).as("is_dup"))
+    val agg = base.groupBy("source").agg(
+      count(lit(1)).as("n_docs"),
+      sum("n_tokens").as("total_tokens"),
+      round(avg("quality"), 4).as("avg_quality"),
+      count(when(col("quality") < 60, 1)).as("low_quality_docs"),
+      countDistinct("lang").as("n_langs"),
+      sum("is_dup").as("dup_text_docs"))
+    val W = org.apache.spark.sql.expressions.Window
+    val w = W.partitionBy(lit(1))
+      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    agg
+      .withColumn("__tot", sum("n_docs").over(w))
+      .select(col("source"), col("n_docs"),
+        expr("n_docs * 1000000L div __tot").as("docs_ppm"),
+        col("total_tokens"), col("avg_quality"),
+        col("low_quality_docs"), col("n_langs"), col("dup_text_docs"))
+  }
+
   val all: Seq[QuerySpec] = Seq(
 
     sql("llm1_clean_corpus",
@@ -95,7 +130,7 @@ object LlmPipelineQueries {
       (s, d) =>
         DocPipeline.cleanCorpus(Tables.documents(s, d))
           .orderBy("doc_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: the same composition with the hot-shingle df-cap in
       // the near-dup stage (no-op on this corpus; the scale guard at
       // 100 TB) and no oracle-only total sort
@@ -157,7 +192,7 @@ object LlmPipelineQueries {
          |       ROUND(AVG(quality), 4) AS avg_quality
          | FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin.replace("\n", "")) {
       (s, d) => shardBuild(s, d, hashedProbe = false).orderBy("shard_id")
-    }.withBench {
+    }.withBench(Parity.Exact) {
       // production: hashed decontamination probe (8-byte broadcast keys)
       // and no oracle-only sort; stages otherwise identical
       (s, d) => shardBuild(s, d, hashedProbe = true)
@@ -252,7 +287,7 @@ object LlmPipelineQueries {
       (s, d) =>
         graft.ops.Mixture.temperatureMixture(Tables.documents(s, d), budget = 200L)
           .orderBy("source", "rn", "doc_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Structural("source", "rn")) { (s, d) =>
       // production: xxhash64 draw (8-byte shuffle keys), no oracle sort
       import org.apache.spark.sql.functions.{col, xxhash64}
       graft.ops.Mixture.temperatureMixture(Tables.documents(s, d), budget = 200L,
@@ -282,66 +317,11 @@ object LlmPipelineQueries {
          |  CAST(total_tokens AS BIGINT) AS total_tokens, avg_quality,
          |  low_quality_docs, CAST(n_langs AS BIGINT) AS n_langs, dup_text_docs
          | FROM agg ORDER BY source""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        import org.apache.spark.sql.functions._
-        val docs = Tables.documents(s, d)
-        // at 100 TB the dup-exposure join keys on xxhash64(text) (dd1's
-        // shuffle-width discipline); the oracle keeps the string
-        val tc = docs.groupBy("text").agg(count(lit(1)).as("n_copies"))
-        val base = docs.join(tc, "text").select(
-          col("source"), col("lang"),
-          graft.ops.TextOps.tokenCount(col("text")).as("n_tokens"),
-          graft.ops.TextOps.qualityScore(col("text"),
-            graft.ops.TextOps.corpusStopwords).as("quality"),
-          when(col("n_copies") > 1, 1L).otherwise(0L).as("is_dup"))
-        val agg = base.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("total_tokens"),
-          round(avg("quality"), 4).as("avg_quality"),
-          count(when(col("quality") < 60, 1)).as("low_quality_docs"),
-          countDistinct("lang").as("n_langs"),
-          sum("is_dup").as("dup_text_docs"))
-        val W = org.apache.spark.sql.expressions.Window
-        val w = W.partitionBy(lit(1))
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-        agg
-          .withColumn("__tot", sum("n_docs").over(w))
-          .select(col("source"), col("n_docs"),
-            expr("n_docs * 1000000L div __tot").as("docs_ppm"),
-            col("total_tokens"), col("avg_quality"),
-            col("low_quality_docs"), col("n_langs"), col("dup_text_docs"))
-          .orderBy("source")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => dataCard(s, d, hashed = false)
+    }.oracleOrder("source").withBench(Parity.Exact) { (s, d) =>
       // production: dup exposure joins on xxhash64(text) — 8-byte
-      // shuffle keys instead of full document texts (dd1's discipline);
-      // the oracle-only sort drops
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d)
-        .withColumn("__th", xxhash64(col("text")))
-      val tc = docs.groupBy("__th").agg(count(lit(1)).as("n_copies"))
-      val base = docs.join(tc, "__th").select(
-        col("source"), col("lang"),
-        graft.ops.TextOps.tokenCount(col("text")).as("n_tokens"),
-        graft.ops.TextOps.qualityScore(col("text"),
-          graft.ops.TextOps.corpusStopwords).as("quality"),
-        when(col("n_copies") > 1, 1L).otherwise(0L).as("is_dup"))
-      val agg = base.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum("n_tokens").as("total_tokens"),
-        round(avg("quality"), 4).as("avg_quality"),
-        count(when(col("quality") < 60, 1)).as("low_quality_docs"),
-        countDistinct("lang").as("n_langs"),
-        sum("is_dup").as("dup_text_docs"))
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.partitionBy(lit(1))
-        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-      agg
-        .withColumn("__tot", sum("n_docs").over(w))
-        .select(col("source"), col("n_docs"),
-          expr("n_docs * 1000000L div __tot").as("docs_ppm"),
-          col("total_tokens"), col("avg_quality"),
-          col("low_quality_docs"), col("n_langs"), col("dup_text_docs"))
+      // shuffle keys instead of full document texts (dd1's discipline)
+      dataCard(s, d, hashed = true)
     },
 
     sql("llm9_concentration",

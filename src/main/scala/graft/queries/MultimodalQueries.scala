@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.sql
 import graft.model.Tables
 import graft.ops.Multimodal
@@ -70,7 +70,7 @@ object MultimodalQueries {
         Multimodal.sharedChunkPairs(
           Multimodal.mediaFromDocuments(Tables.documents(s, d)), minShared = 2)
           .orderBy("id1", "id2")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: hot-chunk df-cap on (all-zero blocks / shared headers
       // would otherwise fan the bucket join out quadratically)
       Multimodal.sharedChunkPairs(

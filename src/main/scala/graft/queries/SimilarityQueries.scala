@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.{rowsOnly, sql}
 import graft.model.Tables
 import graft.ops.Similarity
@@ -95,6 +95,25 @@ object SimilarityQueries {
       (s"$root/codebooks", s"$root/codes")
     }
 
+  /** dd12's within-cluster prune. `fused` scores pairs with the native
+    * `graft_cosine` expression (production); otherwise the HOF form. */
+  private def semanticPrune(s: org.apache.spark.sql.SparkSession, d: String,
+                            fused: Boolean): org.apache.spark.sql.DataFrame = {
+    val e = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
+    val cosine =
+      if (fused) expr("graft_cosine(ea, eb)") else Similarity.cosine(col("ea"), col("eb"))
+    val prs = e.select(col("vec_id").as("id1"), col("label"), col("embedding").as("ea"))
+      .join(e.select(col("vec_id").as("id2"), col("label").as("lb"),
+        col("embedding").as("eb")),
+        col("label") === col("lb") && col("id1") < col("id2"))
+      .filter(round(cosine, 6) >= 0.35)
+      .select("id1", "id2")
+    graft.ops.Dedup.connectedComponents(prs)
+      .filter(col("doc_id") =!= col("cluster"))
+      .join(e.select(col("vec_id"), col("label")), col("doc_id") === col("vec_id"))
+      .select(col("vec_id"), col("label"), col("cluster"))
+  }
+
   val all: Seq[QuerySpec] = Seq(
 
     sql("ss1_cosine_topk",
@@ -107,7 +126,7 @@ object SimilarityQueries {
         Similarity.cosineTopK(
           Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
           queryVec(s, d), k = 10)
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       // production: native codegen'd expression (one fused loop, no
       // intermediate arrays) — bit-identical to the HOF form, see
       // graft.expressions.CosineSimilarity
@@ -259,34 +278,11 @@ object SimilarityQueries {
          |SELECT cl.vec_id AS vec_id, e.label AS label, cl.cluster AS cluster
          | FROM cl JOIN e ON cl.vec_id = e.vec_id
          | WHERE cl.vec_id <> cl.cluster ORDER BY cl.vec_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val e = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
-        val prs = e.select(col("vec_id").as("id1"), col("label"), col("embedding").as("ea"))
-          .join(e.select(col("vec_id").as("id2"), col("label").as("lb"),
-            col("embedding").as("eb")),
-            col("label") === col("lb") && col("id1") < col("id2"))
-          .filter(round(Similarity.cosine(col("ea"), col("eb")), 6) >= 0.35)
-          .select("id1", "id2")
-        graft.ops.Dedup.connectedComponents(prs)
-          .filter(col("doc_id") =!= col("cluster"))
-          .join(e.select(col("vec_id"), col("label")), col("doc_id") === col("vec_id"))
-          .select(col("vec_id"), col("label"), col("cluster"))
-          .orderBy("vec_id")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => semanticPrune(s, d, fused = false)
+    }.oracleOrder("vec_id").withBench(Parity.Exact) { (s, d) =>
       // production: the fused codegen'd cosine expression (no
       // intermediate arrays per pair — the pairwise step is the hot loop)
-      val e = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
-      val prs = e.select(col("vec_id").as("id1"), col("label"), col("embedding").as("ea"))
-        .join(e.select(col("vec_id").as("id2"), col("label").as("lb"),
-          col("embedding").as("eb")),
-          col("label") === col("lb") && col("id1") < col("id2"))
-        .filter(round(expr("graft_cosine(ea, eb)"), 6) >= 0.35)
-        .select("id1", "id2")
-      graft.ops.Dedup.connectedComponents(prs)
-        .filter(col("doc_id") =!= col("cluster"))
-        .join(e.select(col("vec_id"), col("label")), col("doc_id") === col("vec_id"))
-        .select(col("vec_id"), col("label"), col("cluster"))
+      semanticPrune(s, d, fused = true)
     }
   )
 }

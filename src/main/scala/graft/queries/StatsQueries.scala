@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.sql
 import graft.model.Tables
 import graft.ops.Det
@@ -12,6 +13,51 @@ import graft.ops.Det
   * distribution shape as any sum), so they scale like A1/A4.
   */
 object StatsQueries {
+
+  /** a21's 8-bucket histogram of l_extendedprice. `sketch` bins against
+    * broadcast approx-percentile boundaries (production); otherwise
+    * NTILE over a total order. */
+  private def equiDepthHistogram(s: SparkSession, d: String, sketch: Boolean): DataFrame = {
+    val li = Tables.lineitem(s, d)
+    val binned =
+      if (sketch) {
+        val bnds = li.agg(percentile_approx(col("l_extendedprice"),
+          array((1 to 7).map(i => lit(i / 8.0)): _*), lit(10000)).as("bnds"))
+        li.crossJoin(broadcast(bnds))
+          .select(col("l_extendedprice"),
+            (size(filter(col("bnds"), b => b <= col("l_extendedprice"))) + 1)
+              .cast("long").as("bucket"))
+      } else {
+        val w = org.apache.spark.sql.expressions.Window
+          .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
+        li.select(col("l_extendedprice"), ntile(8).over(w).cast("long").as("bucket"))
+      }
+    binned.groupBy("bucket")
+      .agg(count(lit(1)).as("n_items"),
+        min("l_extendedprice").as("min_price"),
+        max("l_extendedprice").as("max_price"))
+  }
+
+  /** p10's per-status checksum over each canonically serialized order row.
+    * `xor` is the production form, BIT XOR of xxhash64; otherwise the sum
+    * of md5 28-bit prefixes, the oracle-portable form. */
+  private def rowFingerprint(s: SparkSession, d: String, xor: Boolean): DataFrame = {
+    val canon = concat_ws("|",
+      col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
+      col("o_orderstatus"), col("o_orderpriority"),
+      date_format(col("o_orderdate"), "yyyy-MM-dd"),
+      round(col("o_totalprice") * 100).cast("long").cast("string"))
+    if (xor)
+      Tables.orders(s, d)
+        .select(col("o_orderstatus").as("status"), xxhash64(canon).as("h"))
+        .groupBy("status")
+        .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("checksum"))
+    else
+      Tables.orders(s, d)
+        .groupBy(col("o_orderstatus").as("status"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(conv(substring(md5(canon), 1, 7), 16, 10).cast("long")).as("checksum"))
+  }
 
   val all: Seq[QuerySpec] = Seq(
 
@@ -223,7 +269,7 @@ object StatsQueries {
             round(expr("percentile(l_extendedprice, 0.90)"), 4).as("p90"),
             round(expr("percentile(l_extendedprice, 0.99)"), 4).as("p99"))
           .orderBy("l_returnflag")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Structural("l_returnflag")) { (s, d) =>
       // production: per-group mergeable sketches — exact percentile
       // buffers every value of the group in one agg buffer (OOM at scale)
       // (r19: a widen was A/B-measured 1.27× vs a 1.17× control — the
@@ -269,33 +315,13 @@ object StatsQueries {
         |   CAST(NTILE(8) OVER (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS BIGINT) AS bucket
         |   FROM lineitem)
         | GROUP BY bucket ORDER BY bucket""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        Tables.lineitem(s, d)
-          .select(col("l_extendedprice"), ntile(8).over(w).cast("long").as("bucket"))
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n_items"),
-            min("l_extendedprice").as("min_price"),
-            max("l_extendedprice").as("max_price"))
-          .orderBy("bucket")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => equiDepthHistogram(s, d, sketch = false)
+    }.oracleOrder("bucket").withBench(Parity.Structural("bucket")) { (s, d) =>
       // production: exact equal counts need a global sort, which is the
       // wrong envelope at 100 TB — bin against broadcast one-pass
       // percentile-sketch boundaries instead (approximately equal depths,
       // fully map-side: bucket = #boundaries <= x)
-      val li = Tables.lineitem(s, d)
-      val bnds = li.agg(percentile_approx(col("l_extendedprice"),
-        array((1 to 7).map(i => lit(i / 8.0)): _*), lit(10000)).as("bnds"))
-      li.crossJoin(broadcast(bnds))
-        .select(col("l_extendedprice"),
-          (size(filter(col("bnds"), b => b <= col("l_extendedprice"))) + 1)
-            .cast("long").as("bucket"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_items"),
-          min("l_extendedprice").as("min_price"),
-          max("l_extendedprice").as("max_price"))
+      equiDepthHistogram(s, d, sketch = true)
     },
 
     sql("p9_anomalous_partitions",
@@ -619,33 +645,13 @@ object StatsQueries {
         |    CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR))), 1, 7))::BIGINT)
         |    AS BIGINT) AS checksum
         | FROM orders GROUP BY 1 ORDER BY status""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val canon = concat_ws("|",
-          col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
-          col("o_orderstatus"), col("o_orderpriority"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd"),
-          round(col("o_totalprice") * 100).cast("long").cast("string"))
-        Tables.orders(s, d)
-          .groupBy(col("o_orderstatus").as("status"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(conv(substring(md5(canon), 1, 7), 16, 10).cast("long"))
-              .as("checksum"))
-          .orderBy("status")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => rowFingerprint(s, d, xor = false)
+    }.oracleOrder("status").withBench(Parity.Structural("status", "n_rows")) { (s, d) =>
       // production accumulates by BIT XOR, not SUM: order-independent like
       // the sum, but it cannot overflow at any row count (ANSI mode aborts
       // a summed full-range xxhash64 on the second row) — and orders rows
       // are key-unique, so the xor's duplicate-pair blind spot is moot
-      val canon = concat_ws("|",
-        col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
-        col("o_orderstatus"), col("o_orderpriority"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd"),
-        round(col("o_totalprice") * 100).cast("long").cast("string"))
-      Tables.orders(s, d)
-        .select(col("o_orderstatus").as("status"), xxhash64(canon).as("h"))
-        .groupBy("status")
-        .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("checksum"))
+      rowFingerprint(s, d, xor = true)
     },
 
     sql("a27_theil_sen",

@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Parity, QuerySpec}
 import graft.QuerySpec.{rowsOnly, sql}
 import graft.model.Tables
 import graft.ops.TextOps
@@ -39,6 +40,87 @@ object TextQueries {
        |SELECT predicted_lang, lang, COUNT(*) AS n_docs
        | FROM p GROUP BY predicted_lang, lang
        | ORDER BY predicted_lang, lang""".stripMargin.replace("\n", "")
+  }
+
+  /** t11's per-doc repetition signals. `hashed` is the production form:
+    * the widened scan, and the (doc_id, bigram) shuffle carries
+    * xxhash64(bigram) instead of the string. */
+  private def repetition(s: SparkSession, d: String, hashed: Boolean): DataFrame = {
+    val bigrams = (if (hashed) Tables.widened(s, d, "documents") else Tables.documents(s, d))
+      .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("__ws"))
+      .select(col("doc_id"),
+        (lit(1.0) - size(array_distinct(col("__ws"))).cast("double") / size(col("__ws")))
+          .as("dup_frac"),
+        explode(TextOps.positionalShinglesFromTokens(col("text"), col("__ws"), 2))
+          .as(if (hashed) "__bg" else "bg"))
+    val base =
+      if (hashed) bigrams.select(col("doc_id"), col("dup_frac"), xxhash64(col("__bg")).as("bg"))
+      else bigrams
+    base.groupBy("doc_id", "bg")
+      .agg(count(lit(1)).as("n"), max("dup_frac").as("dup_frac"))
+      .groupBy("doc_id")
+      .agg(
+        round(max("dup_frac"), 4).as("dup_token_frac"),
+        round(max("n") * lit(1.0) / sum("n"), 4).as("top_bigram_frac"))
+  }
+
+  /** t4's winnowing fingerprints. `fast` hashes shingles with xxhash64
+    * (production); otherwise md5, the oracle-portable form. */
+  private def winnowFingerprints(s: SparkSession, d: String, fast: Boolean): DataFrame =
+    // staged projections: each array is materialized once per row
+    // (inlining these recomputes the hash per sliding window — see
+    // TextOps.winnowFromHashes — and re-splits per shingle)
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("ws"))
+      .select(col("doc_id"),
+        TextOps.positionalShinglesFromTokens(col("text"), col("ws")).as("shingles"))
+      .select(col("doc_id"),
+        transform(col("shingles"), sh => if (fast) xxhash64(sh) else md5(sh)).as("hashes"))
+      .select(col("doc_id"), TextOps.winnowFromHashes(col("hashes")).as("fps"))
+      .select(
+        col("doc_id"),
+        size(col("fps")).cast("long").as("n_fingerprints"),
+        array_min(col("fps")).as("min_fp"))
+
+  /** t8's top-20 tokens with their doc frequencies. `sketch` counts doc
+    * frequencies with HLL (production); otherwise exactly. */
+  private def tokenFreq(s: SparkSession, d: String, sketch: Boolean): DataFrame =
+    // explode → partial+final count agg on the token; the top-20 is
+    // TakeOrderedAndProject
+    Tables.documents(s, d)
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
+      .groupBy("token")
+      .agg(count(lit(1)).as("occurrences"),
+        (if (sketch) approx_count_distinct("doc_id") else countDistinct("doc_id")).as("doc_freq"))
+      .orderBy(col("occurrences").desc, col("token"))
+      .limit(20)
+
+  /** t10's top-3 TF-IDF terms per doc. `sketch` counts doc frequencies
+    * with HLL (production); otherwise exactly. */
+  private def tfidfTop3(s: SparkSession, d: String, sketch: Boolean): DataFrame = {
+    // tf and df are two partial+final hash aggs over one exploded
+    // token frame; N is a broadcast 1-row aggregate (never a driver
+    // scalar); the top-3 is a per-doc row_number window. The window
+    // orders by the ROUNDED score: distinct (tf, df) pairs can yield
+    // mathematically-equal scores via different expressions (e.g.
+    // 2·ln(10) vs ln(100)) whose last ulps may differ between
+    // DuckDB's libm log and Java's Math.log — rounding first
+    // collapses those to equal, and the token tie-break then orders
+    // identically in both engines.
+    val tok = Tables.documents(s, d)
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
+    val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    val df = tok.groupBy("token")
+      .agg((if (sketch) approx_count_distinct("doc_id") else countDistinct("doc_id")).as("df"))
+    val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
+    val tfidf = col("tf") * log(col("n_docs") * lit(1.0) / col("df"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy(round(tfidf, 4).desc, col("token"))
+    tf.join(df, "token").crossJoin(broadcast(n))
+      .select(col("doc_id"), col("token"),
+        round(tfidf, 4).as("tfidf"),
+        row_number().over(w).cast("long").as("rank"))
+      .filter(col("rank") <= 3)
   }
 
   val all: Seq[QuerySpec] = Seq(
@@ -79,39 +161,12 @@ object TextQueries {
         |SELECT doc_id, ROUND(MAX(dup_frac), 4) AS dup_token_frac,
         |       ROUND(MAX(n) * 1.0 / SUM(n), 4) AS top_bigram_frac
         | FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("__ws"))
-          .select(col("doc_id"),
-            (lit(1.0) - size(array_distinct(col("__ws"))).cast("double") / size(col("__ws")))
-              .as("dup_frac"),
-            explode(TextOps.positionalShinglesFromTokens(col("text"), col("__ws"), 2)).as("bg"))
-        base.groupBy("doc_id", "bg")
-          .agg(count(lit(1)).as("n"), max("dup_frac").as("dup_frac"))
-          .groupBy("doc_id")
-          .agg(
-            round(max("dup_frac"), 4).as("dup_token_frac"),
-            round(max("n") * lit(1.0) / sum("n"), 4).as("top_bigram_frac"))
-          .orderBy("doc_id")
-      }
-    }.withBench { (s, d) =>
+      (s, d) => repetition(s, d, hashed = false)
+    }.oracleOrder("doc_id").withBench(Parity.Exact) { (s, d) =>
       // production: the (doc_id, bigram) shuffle carries an 8-byte
       // xxhash64 instead of the bigram string (dd1's shuffle-width
-      // discipline; a 2⁻⁶⁴ collision could only merge two bigram counts),
-      // and the oracle-only sort is dropped
-      val base = Tables.widened(s, d, "documents")
-        .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("__ws"))
-        .select(col("doc_id"),
-          (lit(1.0) - size(array_distinct(col("__ws"))).cast("double") / size(col("__ws")))
-            .as("dup_frac"),
-          explode(TextOps.positionalShinglesFromTokens(col("text"), col("__ws"), 2)).as("__bg"))
-        .select(col("doc_id"), col("dup_frac"), xxhash64(col("__bg")).as("bg"))
-      base.groupBy("doc_id", "bg")
-        .agg(count(lit(1)).as("n"), max("dup_frac").as("dup_frac"))
-        .groupBy("doc_id")
-        .agg(
-          round(max("dup_frac"), 4).as("dup_token_frac"),
-          round(max("n") * lit(1.0) / sum("n"), 4).as("top_bigram_frac"))
+      // discipline; a 2⁻⁶⁴ collision could only merge two bigram counts)
+      repetition(s, d, hashed = true)
     },
 
     sql("t12_unigram_logprob",
@@ -191,34 +246,11 @@ object TextQueries {
         |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fingerprints,
         | list_aggregate(fps, 'min') AS min_fp
         | FROM f ORDER BY doc_id""".stripMargin.replace("\n", "")) {
-      (s, d) =>
-        // staged projections: each array is materialized once per row
-        // (inlining these recomputes md5 per sliding window — see
-        // TextOps.winnowFromHashes — and re-splits per shingle)
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("ws"))
-          .select(col("doc_id"),
-            TextOps.positionalShinglesFromTokens(col("text"), col("ws")).as("shingles"))
-          .select(col("doc_id"), transform(col("shingles"), sh => md5(sh)).as("hashes"))
-          .select(col("doc_id"), TextOps.winnowFromHashes(col("hashes")).as("fps"))
-          .select(
-            col("doc_id"),
-            size(col("fps")).cast("long").as("n_fingerprints"),
-            array_min(col("fps")).as("min_fp"))
-          .orderBy("doc_id")
-    }.withBench { (s, d) =>
+      (s, d) => winnowFingerprints(s, d, fast = false)
+    }.oracleOrder("doc_id").withBench(Parity.Structural("doc_id")) { (s, d) =>
       // production: xxhash64 fingerprints (md5 exists only for oracle
-      // portability — see TextOps scaladoc), no total sort
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("ws"))
-        .select(col("doc_id"),
-          TextOps.positionalShinglesFromTokens(col("text"), col("ws")).as("shingles"))
-        .select(col("doc_id"), transform(col("shingles"), sh => xxhash64(sh)).as("hashes"))
-        .select(col("doc_id"), TextOps.winnowFromHashes(col("hashes")).as("fps"))
-        .select(
-          col("doc_id"),
-          size(col("fps")).cast("long").as("n_fingerprints"),
-          array_min(col("fps")).as("min_fp"))
+      // portability — see TextOps scaladoc)
+      winnowFingerprints(s, d, fast = true)
     },
 
     sql("t6_langid_ngram",
@@ -249,26 +281,11 @@ object TextQueries {
         | CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS doc_freq
         | FROM (SELECT doc_id, UNNEST(string_split(text, ' ')) AS token FROM documents)
         | GROUP BY token ORDER BY occurrences DESC, token LIMIT 20""".stripMargin.replace("\n", "")) {
-      (s, d) =>
-        // explode → partial+final count agg on the token; the top-20 is
-        // TakeOrderedAndProject. At 100 TB the exact COUNT(DISTINCT doc_id)
-        // is the expensive part (expand+shuffle per token) — production
-        // would swap in approx_count_distinct, same as a14
-        Tables.documents(s, d)
-          .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-          .groupBy("token")
-          .agg(count(lit(1)).as("occurrences"),
-            countDistinct("doc_id").as("doc_freq"))
-          .orderBy(col("occurrences").desc, col("token"))
-          .limit(20)
-    }.withBench { (s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("occurrences"),
-          approx_count_distinct("doc_id").as("doc_freq"))
-        .orderBy(col("occurrences").desc, col("token"))
-        .limit(20)
+      (s, d) => tokenFreq(s, d, sketch = false)
+    }.withBench(Parity.Structural("token", "occurrences")) { (s, d) =>
+      // production: at 100 TB the exact COUNT(DISTINCT doc_id) is the
+      // expensive part (expand+shuffle per token) — the sketch, as in a14
+      tokenFreq(s, d, sketch = true)
     },
 
     sql("t7_fuzzy_match",
@@ -338,47 +355,11 @@ object TextQueries {
         |  FROM tf JOIN df USING (token) CROSS JOIN n)
         |SELECT doc_id, token, tfidf, CAST(rank AS BIGINT) AS rank
         | FROM scored WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin.replace("\n", "")) {
-      (s, d) => {
-        // tf and df are two partial+final hash aggs over one exploded
-        // token frame; N is a broadcast 1-row aggregate (never a driver
-        // scalar); the top-3 is a per-doc row_number window. The window
-        // orders by the ROUNDED score: distinct (tf, df) pairs can yield
-        // mathematically-equal scores via different expressions (e.g.
-        // 2·ln(10) vs ln(100)) whose last ulps may differ between
-        // DuckDB's libm log and Java's Math.log — rounding first
-        // collapses those to equal, and the token tie-break then orders
-        // identically in both engines.
-        val tok = Tables.documents(s, d)
-          .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-        val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        val df = tok.groupBy("token").agg(countDistinct("doc_id").as("df"))
-        val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-        val tfidf = col("tf") * log(col("n_docs") * lit(1.0) / col("df"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(round(tfidf, 4).desc, col("token"))
-        tf.join(df, "token").crossJoin(broadcast(n))
-          .select(col("doc_id"), col("token"),
-            round(tfidf, 4).as("tfidf"),
-            row_number().over(w).cast("long").as("rank"))
-          .filter(col("rank") <= 3)
-          .orderBy("doc_id", "rank")
-      }
-    }.withBench { (s, d) =>
-      // production: same plan minus the oracle sort, HLL doc frequencies
-      // (exact COUNT DISTINCT per token is the expensive expand at scale)
-      val tok = Tables.documents(s, d)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-      val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val df = tok.groupBy("token").agg(approx_count_distinct("doc_id").as("df"))
-      val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      val tfidf = col("tf") * log(col("n_docs") * lit(1.0) / col("df"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(round(tfidf, 4).desc, col("token"))
-      tf.join(df, "token").crossJoin(broadcast(n))
-        .select(col("doc_id"), col("token"),
-          round(tfidf, 4).as("tfidf"),
-          row_number().over(w).cast("long").as("rank"))
-        .filter(col("rank") <= 3)
+      (s, d) => tfidfTop3(s, d, sketch = false)
+    }.oracleOrder("doc_id", "rank").withBench(Parity.Structural("doc_id", "rank")) { (s, d) =>
+      // production: HLL doc frequencies (exact COUNT DISTINCT per token
+      // is the expensive expand at scale)
+      tfidfTop3(s, d, sketch = true)
     },
 
     sql("t5_langid",
@@ -485,7 +466,7 @@ object TextQueries {
         TextOps.removeBoilerplate(Tables.documents(s, d), "doc_id", "text",
             segTokens = 8, minDocs = 2)
           .orderBy("doc_id")
-    }.withBench { (s, d) =>
+    }.withBench(Parity.Exact) { (s, d) =>
       TextOps.removeBoilerplate(Tables.documents(s, d), "doc_id", "text",
         segTokens = 8, minDocs = 2, hashedKeys = true)
     },

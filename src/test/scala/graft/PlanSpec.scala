@@ -524,6 +524,15 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("registry guard: every production function is defined in its query's module") {
+    // perfbench's report mix names a query's module from
+    // production.getClass; a function built outside graft.queries (e.g.
+    // a wrapper lambda in QuerySpec) would move it to the fallback module
+    val outside = SparkEntry.specs.map(s => s.name -> s.production.getClass.getName)
+      .filterNot { case (_, cls) => cls.startsWith("graft.queries.") }
+    assert(outside.isEmpty, s"production functions defined outside graft.queries: $outside")
+  }
+
   test("production percentiles use the sketch, not exact Percentile buffering") {
     val p = plan(specs("a5_percentiles").production(spark, TestSpark.sfDir))
     assert(p.contains("approx_percentile") || p.contains("percentile_approx"))
@@ -839,14 +848,15 @@ class PlanSpec extends AnyFunSuite {
     //   ops/Mixture.scala (2)           1-row weight total; per-source quota dim
     //   streaming/EventStreams.scala (1) user dimension (stream-static enrich)
     //   queries/JoinQueries.scala (4)   nation/region/part dims (incl. j28's nation)
-    //   queries/ExtraQueries.scala (8)  1-row global-stats frames (4);
+    //   queries/ExtraQueries.scala (5)  1-row global-stats frames (3);
     //                                   d7's per-group median/MAD stat
-    //                                   frames ×2 oracle + ×2 bench (≤3
-    //                                   rows — group-keyed p2 discipline)
+    //                                   frames ×2, shared by the oracle and
+    //                                   bench forms (≤3 rows — group-keyed
+    //                                   p2 discipline)
     //   queries/StatsQueries.scala (6)  1-row thresholds/bounds/global stats,
     //                                   a25's 9-row Benford expectation + 1-row n
     //   queries/SimilarityQueries.scala (3) query vectors (1 row)
-    //   queries/TextQueries.scala (6)   vocab-capped df/freq tables, 1-row totals
+    //   queries/TextQueries.scala (5)   vocab-capped df/freq tables, 1-row totals
     //                                   (incl. t17's 1-row doc count)
     //   queries/LlmPipelineQueries.scala (1) llm4 eval-driven contaminated-id
     //                                   sliver (eval-sized — sanctioned, unlike
@@ -866,10 +876,10 @@ class PlanSpec extends AnyFunSuite {
       "ops/Mixture.scala" -> 2,
       "streaming/EventStreams.scala" -> 1,
       "queries/JoinQueries.scala" -> 4,
-      "queries/ExtraQueries.scala" -> 8,
+      "queries/ExtraQueries.scala" -> 5,
       "queries/StatsQueries.scala" -> 6,
       "queries/SimilarityQueries.scala" -> 3,
-      "queries/TextQueries.scala" -> 6,
+      "queries/TextQueries.scala" -> 5,
       "queries/LlmPipelineQueries.scala" -> 1,
       "queries/DsQueries.scala" -> 3)
     val found = mainSourceLines

@@ -231,19 +231,22 @@ object Sinks {
     * re-verified before the swap; a mismatch aborts loudly with the
     * original intact).
     *
-    * Swap discipline (Hadoop FileSystem API, so the same code runs on
-    * local/HDFS/S3A): write to `path.__compact_tmp`, verify, delete the
-    * original, rename tmp into place. The delete→rename window is not
-    * atomic — a crash there leaves only the tmp dir, which is the
-    * RECOVERABLE state (the data exists exactly once; re-running the
-    * compaction completes the swap). The verify-before-delete ordering
-    * guarantees the crash can never lose rows. */
+    * Swap discipline: [[graft.ops.StagedSwap]] (Hadoop FileSystem API, so
+    * the same code runs on local/HDFS/S3A) — the rewrite is built under
+    * `path.refresh-staging`, verified, then swapped in by two renames. A
+    * crash between the renames leaves no `path`, and the next call heals
+    * it before reading: the verified rewrite (its `_SUCCESS` landed) is
+    * promoted, else the retired original. The verify-before-swap
+    * ordering guarantees a crash can never lose rows. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
                      targetBytes: Long = 128L * 1024 * 1024): CompactionReport = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
-    val tmp = new Path(path + ".__compact_tmp")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = Seq("_SUCCESS")
+    // nothing live and nothing to promote is the missing-dir case below
+    try graft.ops.StagedSwap.recover(spark, path, marker)
+    catch { case _: IllegalStateException => false }
     require(fs.exists(p), s"compactParquet: $path does not exist")
     def parquetFiles(dir: Path): Int = {
       val it = fs.listFiles(dir, true)
@@ -254,14 +257,14 @@ object Sinks {
     val filesBefore = parquetFiles(p)
     val src = spark.read.parquet(path)
     val rows = src.count()
-    if (fs.exists(tmp)) fs.delete(tmp, true) // stale tmp from an aborted run
-    val bytes = parquetSizedMaterialized(src, tmp.toString, targetBytes)
-    val rewritten = spark.read.parquet(tmp.toString).count()
-    require(rewritten == rows,
-      s"compactParquet: rewrite has $rewritten rows, source has $rows — " +
-        s"aborting with the original intact (tmp left at $tmp)")
-    fs.delete(p, true)
-    require(fs.rename(tmp, p), s"compactParquet: rename $tmp -> $p failed")
+    val bytes = graft.ops.StagedSwap.swap(spark, path, marker) { staging =>
+      val measured = parquetSizedMaterialized(src, staging, targetBytes)
+      val rewritten = spark.read.parquet(staging).count()
+      require(rewritten == rows,
+        s"compactParquet: rewrite has $rewritten rows, source has $rows — " +
+          s"aborting with the original intact (rewrite left at $staging)")
+      measured
+    }
     // a persisted stats manifest references the files just deleted —
     // rebuild it over the compacted layout (no-op when none exists)
     graft.ops.Manifest.refreshIfPresent(spark, path)

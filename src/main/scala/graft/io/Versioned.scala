@@ -60,7 +60,22 @@ object Versioned {
 
   /** Commit `df` as the next FULL snapshot; returns its version number. */
   def write(df: DataFrame, tablePath: String): Long =
-    commit(df, tablePath, marker = None)
+    commit(df.sparkSession, tablePath)(tmp => df.write.parquet(tmp.toString))
+
+  /** Commit several named frames as ONE full version, each under
+    * `v=N/<name>/` and all claimed by the one rename: readers see every
+    * part of version N or none. Read a part back with [[readPart]];
+    * [[read]], [[diff]] and [[writeDelta]] take single-frame tables. */
+  def writeParts(spark: SparkSession, tablePath: String,
+                 parts: Seq[(String, DataFrame)]): Long =
+    commit(spark, tablePath) { tmp =>
+      parts.foreach { case (name, df) => df.write.parquet(new Path(tmp, name).toString) }
+    }
+
+  /** The frame [[writeParts]] committed under `name` in `version`. */
+  def readPart(spark: SparkSession, tablePath: String, name: String,
+               version: Long): DataFrame =
+    spark.read.parquet(s"$tablePath/v=$version/$name")
 
   /** Commit a U8 CDC changelog as the next version — the delta-sized
     * alternative to [[write]] for frames where a full copy per version is
@@ -95,8 +110,11 @@ object Versioned {
     val missing = (targetCols :+ opCol :+ seqCol).filterNot(changes.columns.contains)
     require(missing.isEmpty,
       s"Versioned.writeDelta: changelog missing columns: ${missing.mkString(",")}")
-    commit(changes, tablePath,
-      marker = Some(s"keys=${keys.mkString(",")}\nop=$opCol\nseq=$seqCol\n"))
+    commit(spark, tablePath) { tmp =>
+      changes.write.parquet(tmp.toString)
+      writeText(fs, new Path(tmp, DeltaMarker),
+        s"keys=${keys.mkString(",")}\nop=$opCol\nseq=$seqCol\n")
+    }
   }
 
   /** Is committed `version` a delta (changelog) rather than a full
@@ -158,8 +176,10 @@ object Versioned {
         .foreach(st => try fs.delete(st.getPath, true) catch { case _: Throwable => () })
   }
 
-  /** Two-phase commit: stage to an attempt-unique tmp dir, then claim the
-    * version by RENAME and VERIFY the claim by marker.
+  /** Two-phase commit: `stage` writes the version's files into an
+    * attempt-unique tmp dir, then the version is claimed by RENAME and the
+    * claim VERIFIED by marker. Every writer ([[write]], [[writeDelta]],
+    * [[writeParts]]) commits through here.
     *
     * rename alone is NOT a safe claim primitive: renaming a directory
     * onto an existing one does not reliably fail — HDFS legacy rename
@@ -180,8 +200,7 @@ object Versioned {
     * free. Pinned by VersionedSpec's barrier-in-the-TOCTOU-window race
     * (and by extension every IncrementalIngest artifact, which commits
     * only through here). */
-  private def commit(df: DataFrame, tablePath: String, marker: Option[String]): Long = {
-    val spark = df.sparkSession
+  private def commit(spark: SparkSession, tablePath: String)(stage: Path => Unit): Long = {
     val next = latestVersion(spark, tablePath).fold(1L)(_ + 1)
     val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
     sweepStaleTmps(fs, tablePath, next, below = true)
@@ -189,13 +208,8 @@ object Versioned {
     val tmp = new Path(tablePath, s".v=$next.tmp-${attempt.take(8)}")
     val dest = new Path(tablePath, s"v=$next")
     try {
-      df.write.parquet(tmp.toString)
-      marker.foreach { m =>
-        val out = fs.create(new Path(tmp, DeltaMarker), false)
-        try out.write(m.getBytes("UTF-8")) finally out.close()
-      }
-      val out = fs.create(new Path(tmp, CommitMarker), false)
-      try out.write(attempt.getBytes("UTF-8")) finally out.close()
+      stage(tmp)
+      writeText(fs, new Path(tmp, CommitMarker), attempt)
       require(!fs.exists(dest),
         s"Versioned.write: $dest already exists — concurrent writer? refusing to clobber")
       preRenameHook()
@@ -226,6 +240,11 @@ object Versioned {
     Option(fs.globStatus(new Path(dest, ".v=*.tmp*"))).getOrElse(Array.empty)
       .foreach(st => try fs.delete(st.getPath, true) catch { case _: Throwable => () })
     next
+  }
+
+  private def writeText(fs: org.apache.hadoop.fs.FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, false)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   private def readText(fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =

@@ -31,6 +31,15 @@ object Manifest {
     * shingle-df table sits next to the LSH index. */
   def manifestPath(dataPath: String): String = dataPath + ".__manifest"
 
+  private val SwapMarkers = Seq("_SUCCESS")
+
+  /** The persisted manifest of `dataPath`, after healing an
+    * [[appendManifest]] swap that crashed between its two renames. */
+  def read(spark: SparkSession, dataPath: String): DataFrame = {
+    StagedSwap.recover(spark, manifestPath(dataPath), SwapMarkers)
+    spark.read.parquet(manifestPath(dataPath))
+  }
+
   /** One stats row per physical file of `path`: (file, n_rows,
     * <c>_min, <c>_max for each tracked column). Nulls are ignored by
     * min/max — an all-null file keeps null stats and is conservatively
@@ -58,12 +67,13 @@ object Manifest {
     * table (the df-table/label-table discipline applied to file stats).
     * Entries for files that vanished (compaction without refresh,
     * retention deletes) are dropped in the same pass. Equals a full
-    * [[writeManifest]] recompute row-for-row (pinned in ManifestSpec). */
+    * [[writeManifest]] recompute row-for-row (pinned in ManifestSpec).
+    * Swapped in through [[StagedSwap]]: the next [[read]] heals a crash. */
   def appendManifest(spark: SparkSession, dataPath: String,
                      cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "appendManifest needs at least one column")
     def key(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val old = spark.read.parquet(manifestPath(dataPath)).localCheckpoint()
+    val old = read(spark, dataPath).localCheckpoint()
     val p = new org.apache.hadoop.fs.Path(dataPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val live = {
@@ -93,11 +103,8 @@ object Manifest {
         spark.read.parquet(fresh: _*)
           .groupBy(input_file_name().as("file"))
           .agg(count(lit(1)).as("n_rows"), aggs: _*))
-    merged.coalesce(1).write.mode("overwrite").parquet(manifestPath(dataPath) + ".__tmp")
-    val mp = new org.apache.hadoop.fs.Path(manifestPath(dataPath))
-    fs.delete(mp, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(manifestPath(dataPath) + ".__tmp"), mp),
-      s"appendManifest: manifest swap rename failed for $mp")
+    StagedSwap.swap(spark, manifestPath(dataPath), SwapMarkers)(
+      merged.coalesce(1).write.parquet(_))
   }
 
   /** Scheme-stripped URI path of a file column — `input_file_name()`
@@ -139,7 +146,7 @@ object Manifest {
                  ranges: Seq[(String, Double, Double)],
                  manifest: Option[DataFrame] = None): DataFrame = {
     require(ranges.nonEmpty, "prunedScan needs at least one range")
-    val m = manifest.getOrElse(spark.read.parquet(manifestPath(dataPath)))
+    val m = manifest.getOrElse(read(spark, dataPath))
     val keep = ranges.foldLeft(m) { case (acc, (c, lo, hi)) =>
       // keep when the envelope intersects [lo,hi] OR stats are null
       acc.filter(

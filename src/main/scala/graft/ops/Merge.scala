@@ -309,7 +309,9 @@ object Merge {
     * representable below 2^53) and combined with a FIXED operation
     * shape — the DuckDB oracle spells out the identical shape, so the
     * unrounded mean is bit-identical and the rounded moments are
-    * aggregate-level (§7.5(f): a handful of O(1) values, not per-row). */
+    * aggregate-level (§7.5(f): a handful of O(1) values, not per-row).
+    * A key whose values are all equal has no skew or kurtosis: both are
+    * null there, as Spark's skewness/kurtosis builtins return. */
   def finalizeMoments(state: DataFrame, keys: Seq[String], scale: Int = 6): DataFrame = {
     val nd = col("n").cast("double")
     val mu = col("s1").cast("double") / nd
@@ -323,8 +325,8 @@ object Merge {
       col("n"),
       mu.as("mean_v"),
       round(m2, scale).as("var_pop"),
-      round(m3 / pow(m2, 1.5), scale).as("skew_v"),
-      round(m4 / (m2 * m2) - 3, scale).as("kurt_v")): _*)
+      when(m2 =!= 0, round(m3 / pow(m2, 1.5), scale)).as("skew_v"),
+      when(m2 =!= 0, round(m4 / (m2 * m2) - 3, scale)).as("kurt_v")): _*)
   }
 
   // ───── mergeable TOP-K (heavy-hitter) state ─────

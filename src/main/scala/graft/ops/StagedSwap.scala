@@ -35,9 +35,9 @@ object StagedSwap {
 
   /** Heal-then-rebuild-then-swap. `build` receives the STAGING root and
     * must leave a complete layout (every `markers` file present) there;
-    * everything else is the protocol above. */
-  def swap(spark: SparkSession, root: String, markers: Seq[String])(
-      build: String => Unit): Unit = {
+    * everything else is the protocol above. Returns what `build` returned. */
+  def swap[T](spark: SparkSession, root: String, markers: Seq[String])(
+      build: String => T): T = {
     recover(spark, root, markers) // heal a crashed previous swap first
     val fs = fsFor(spark, root)
     val live = new org.apache.hadoop.fs.Path(root)
@@ -45,13 +45,14 @@ object StagedSwap {
     val retired = new org.apache.hadoop.fs.Path(s"$root.refresh-retired")
     fs.delete(staging, true) // stale trees from a crashed refresh BUILD
     fs.delete(retired, true)
-    build(staging.toString)
+    val built = build(staging.toString)
     require(markers.forall(m =>
       fs.exists(new org.apache.hadoop.fs.Path(staging, m))),
       s"refresh build left an incomplete layout at $staging (missing a marker of ${markers.mkString(", ")})")
     require(fs.rename(live, retired), s"refresh swap: could not retire $live")
     require(fs.rename(staging, live), s"refresh swap: could not promote $staging")
     fs.delete(retired, true)
+    built
   }
 
   /** Crash recovery for a [[swap]] that died between its two renames: if

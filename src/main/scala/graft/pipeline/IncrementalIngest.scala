@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.io.{Sinks, Versioned}
 import graft.ops.{Dedup, Manifest}
@@ -136,12 +137,12 @@ object IncrementalIngest {
     * the FORGOTTEN SLICE, never the archive:
     *
     *  - `archive/`: only the FILES whose manifest envelope can contain
-    *    a forgotten id are rewritten (write-new → verify → delete-old,
-    *    the [[graft.io.Sinks.compactParquet]] swap discipline — a crash
-    *    leaves the originals or the recoverable rewrite, never lost
-    *    rows); every other file is untouched. [[Manifest.appendManifest]]
-    *    then reconciles the stats rows (drops vanished files, stats the
-    *    new ones).
+    *    a forgotten id are rewritten (write-new → verify → delete-old →
+    *    move-new, see [[finishArchiveSwap]] — a crash leaves the
+    *    originals or the verified rewrite, never lost rows, and the
+    *    next forget completes or discards it first); every other file is
+    *    untouched. [[Manifest.appendManifest]] then reconciles the stats
+    *    rows (drops vanished files, stats the new ones).
     *  - `shingle_df/`: the forgotten docs' shingle contributions
     *    subtract as a DELTA version — decremented shingles upsert,
     *    zeroed shingles delete (the [[graft.ops.Merge.retractStats]]
@@ -167,6 +168,7 @@ object IncrementalIngest {
              maxDf: Long = Dedup.DefaultMaxDf): ForgetResult = {
     import org.apache.spark.sql.functions._
     val p = StatePaths(root)
+    finishArchiveSwap(spark, p) // a crashed earlier forget's archive swap
     val gone = forgetIds.select("doc_id").distinct().localCheckpoint()
     val archive = spark.read.parquet(p.archive)
     val goneDocs = archive.join(gone, Seq("doc_id"), "left_semi").localCheckpoint()
@@ -223,7 +225,7 @@ object IncrementalIngest {
 
     // 4. archive: rewrite ONLY the files whose stats envelope admits a
     // forgotten id (manifest pruning, the prunedScan planning pattern)
-    val manifest = spark.read.parquet(Manifest.manifestPath(p.archive))
+    val manifest = Manifest.read(spark, p.archive)
     val touched = manifest.alias("m").join(gone,
         gone("doc_id") >= col("doc_id_min") && gone("doc_id") <= col("doc_id_max"),
         "left_semi")
@@ -231,10 +233,8 @@ object IncrementalIngest {
       .collect().map(_.getString(0)) // metadata scale: one string per touched file
     val filesRewritten = touched.length
     if (filesRewritten > 0) {
-      val hp = new org.apache.hadoop.fs.Path(p.archive)
-      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new org.apache.hadoop.fs.Path(p.archive + ".__forget_tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
+      val fs = new Path(p.archive).getFileSystem(spark.sessionState.newHadoopConf())
+      val tmp = forgetTmp(p)
       val touchedDf = spark.read.parquet(touched.toIndexedSeq: _*)
       val expect = touchedDf.count() - nGone
       val kept = touchedDf.join(gone, Seq("doc_id"), "left_anti")
@@ -243,21 +243,46 @@ object IncrementalIngest {
       require(rewritten == expect,
         s"forget: rewrite has $rewritten rows, expected $expect — " +
           s"aborting with the archive intact (tmp left at $tmp)")
-      touched.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-      val it = fs.listFiles(tmp, false)
-      var n = 0
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) {
-          require(fs.rename(f, new org.apache.hadoop.fs.Path(hp, s"forget-$n-${f.getName}")),
-            s"forget: rename $f into $hp failed")
-          n += 1
-        }
+      val out = fs.create(new Path(tmp, ReplacesMarker), false)
+      try out.write(touched.mkString("\n").getBytes("UTF-8")) finally out.close()
+      finishArchiveSwap(spark, p)
+    }
+    ForgetResult(nGone, filesRewritten, nRelabeled)
+  }
+
+  private def forgetTmp(p: StatePaths) = new Path(p.archive + ".__forget_tmp")
+
+  /** Lands in [[forgetTmp]] once its rewrite is verified: the archive
+    * files it replaces, one per line. */
+  private val ReplacesMarker = "_REPLACES"
+
+  /** Test seam: runs between deleting the replaced files and moving the
+    * rewrite in. Production value is a no-op. */
+  private[pipeline] var preMoveHook: () => Unit = () => ()
+
+  /** [[forget]]'s archive swap, and its crash recovery: a verified
+    * rewrite (its [[ReplacesMarker]] landed) replaces the files it lists
+    * and the manifest is reconciled; an unverified one is discarded, its
+    * originals untouched. Idempotent, so the next call finishes a crash
+    * anywhere in it. */
+  private def finishArchiveSwap(spark: SparkSession, p: StatePaths): Unit = {
+    val archive = new Path(p.archive)
+    val fs = archive.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = forgetTmp(p)
+    val marker = new Path(tmp, ReplacesMarker)
+    if (fs.exists(marker)) {
+      val in = fs.open(marker)
+      val replaced =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+      replaced.foreach(f => fs.delete(new Path(f), false))
+      preMoveHook()
+      fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).foreach { f =>
+        require(fs.rename(f, new Path(archive, s"forget-${f.getName}")),
+          s"forget: rename $f into $archive failed")
       }
       fs.delete(tmp, true)
       Manifest.appendManifest(spark, p.archive, Seq("doc_id"))
-    }
-    ForgetResult(nGone, filesRewritten, nRelabeled)
+    } else if (fs.exists(tmp)) fs.delete(tmp, true)
   }
 
   /** Streaming form of the cycle: a foreachBatch sink folding every

@@ -22,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   *    LAST un-committed batch, so a four-digit window is already
   *    overwhelmingly conservative;
   *  - underscore-prefixed dirs are invisible to parquet readers, and
-  *    every sink's epoch discovery scans named subdirs — `_applied`
-  *    never aliases state. */
+  *    every sink that keeps epochs discovers them as
+  *    [[graft.io.Versioned]] `v=N` version dirs — `_applied` never
+  *    aliases state. */
 object Replay {
 
   /** Markers older than this many batches behind the current id are

@@ -1,10 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.io.Sinks
+import graft.io.{Sinks, Versioned}
 import graft.ops.Dedup
 
 /** Streaming ingest wired to incremental near-dup dedup: a foreachBatch
@@ -15,33 +16,36 @@ import graft.ops.Dedup
   * end (reference has no streaming at all; this extends the §2.10
   * north-star family).
   *
-  * State layout under `stateDir` (all parquet, all written with
-  * [[Sinks]] — the artifacts round-trip through storage, never live only
-  * in memory):
+  * State layout under `stateDir` (all parquet — the artifacts
+  * round-trip through storage, never live only in memory):
   *
   *   - `corpus/`     append-only (doc_id, text, epoch) — the archive
   *   - `index/`      append-only (doc_id, band, bh, epoch) — LSH band
   *                   index rows of every ingested doc
-  *   - `shingle_df/epoch=N/` per-epoch snapshot of the (shingle, df)
-  *                   table (vocabulary-sized, not corpus-sized)
+  *   - `shingle_df/` a [[Versioned]] table of full (shingle, df)
+  *                   snapshots (vocabulary-sized, not corpus-sized);
+  *                   epoch N is its version N+1 (`shingle_df/v=N+1/`)
   *   - `pairs/`      append-only (id1, id2, jaccard, epoch) — every
   *                   near-dup pair discovered, tagged with the epoch
   *                   whose batch surfaced it
   *
   * Epoch discipline (the [[Dedup.shingleDfTable]] contract): batch N's
   * df contribution is merged into the table FIRST, the epoch-N snapshot
-  * is written, and then BOTH the cap on the batch substrate and the cap
-  * on the batch's new index rows are served from the READ-BACK epoch-N
-  * snapshot — index and batch never disagree on which shingles are hot,
-  * and the increment equals the equivalent batch-mode loop bit for bit
-  * (pinned in StreamingSpec).
+  * is committed, and then BOTH the cap on the batch substrate and the
+  * cap on the batch's new index rows are served from the READ-BACK
+  * epoch-N snapshot — index and batch never disagree on which shingles
+  * are hot, and the increment equals the equivalent batch-mode loop bit
+  * for bit (pinned in StreamingSpec). The snapshot commits by rename, so
+  * a failed df write leaves the epoch where it was and nothing else
+  * written: a replay of the batch folds as if it never ran.
   *
   * Scale shape per micro-batch: work ∝ batch + its collisions (the
   * [[Dedup.incrementalNearDup]] guarantee — the archive is re-read only
   * for candidate docs); state growth per batch is batch-sized corpus/
   * index appends plus one vocabulary-sized df snapshot. No driver-side
   * state: the ONLY driver scalar is the epoch counter, recovered from
-  * the directory listing (restart-safe).
+  * the version listing (Hadoop FS API, so `file:`/`hdfs://`/`s3a://`
+  * state dirs work; restart-safe).
   */
 object StreamingDedup {
 
@@ -52,16 +56,17 @@ object StreamingDedup {
                           k: Int = 3, numPerm: Int = 64,
                           bands: Int = 16, rows: Int = 4, thr: Double = 0.8)
 
-  private def dfSnapshotDir(cfg: Config, epoch: Long) =
-    s"${cfg.stateDir}/shingle_df/epoch=$epoch"
+  private def dfTable(cfg: Config) = s"${cfg.stateDir}/shingle_df"
 
-  /** Highest epoch with a written shingle-df snapshot; -1 before init. */
-  def latestEpoch(cfg: Config): Long = {
-    val base = new java.io.File(s"${cfg.stateDir}/shingle_df")
-    Option(base.listFiles()).toSeq.flatten
-      .flatMap(f => StreamingStats.epochOf(f.getName))
-      .foldLeft(-1L)(math.max)
-  }
+  /** Highest committed shingle-df epoch; -1 before init. */
+  def latestEpoch(cfg: Config): Long = StreamingStats.latestEpochOf(dfTable(cfg))
+
+  /** Commit `table` as the next shingle-df epoch and read it back (every
+    * cap serves from storage). repartition(1) so an EMPTY table still
+    * writes a schema-bearing part file. */
+  private def commitDf(spark: SparkSession, cfg: Config, table: DataFrame): DataFrame =
+    Versioned.read(spark, dfTable(cfg),
+      Some(Versioned.write(table.repartition(1), dfTable(cfg))))
 
   /** Initialize state at epoch 0 from an (optionally empty) starting
     * archive. The corpus/index/df-table triple lands on disk exactly as
@@ -73,9 +78,7 @@ object StreamingDedup {
     // part file (zero-partition writes leave nothing to read back)
     val docs = archive.select(col("doc_id"), col("text"))
       .repartition(1).localCheckpoint()
-    val dfTable = Dedup.shingleDfTable(Dedup.shingleDF(docs, k = cfg.k))
-    Sinks.parquet(dfTable.repartition(1), dfSnapshotDir(cfg, 0))
-    val dfBack = spark.read.parquet(dfSnapshotDir(cfg, 0))
+    val dfBack = commitDf(spark, cfg, Dedup.shingleDfTable(Dedup.shingleDF(docs, k = cfg.k)))
     Sinks.parquet(
       Dedup.lshBandIndexCapped(docs, dfBack, cfg.maxDf,
         cfg.k, cfg.numPerm, cfg.bands, cfg.rows)
@@ -101,11 +104,9 @@ object StreamingDedup {
     // probe, and two appends — a lazy stream batch would re-read the
     // source per consumer
     val docs = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    val merged = Dedup.mergeShingleDf(Seq(
-      spark.read.parquet(dfSnapshotDir(cfg, epoch)),
-      Dedup.shingleDfTable(Dedup.shingleDF(docs, k = cfg.k))))
-    Sinks.parquet(merged.repartition(1), dfSnapshotDir(cfg, epoch + 1))
-    val dfBack = spark.read.parquet(dfSnapshotDir(cfg, epoch + 1))
+    val dfBack = commitDf(spark, cfg, Dedup.mergeShingleDf(Seq(
+      Versioned.read(spark, dfTable(cfg)),
+      Dedup.shingleDfTable(Dedup.shingleDF(docs, k = cfg.k)))))
 
     val corpus = spark.read.parquet(s"${cfg.stateDir}/corpus").select("doc_id", "text")
     val index = spark.read.parquet(s"${cfg.stateDir}/index").select("doc_id", "band", "bh")
@@ -147,8 +148,9 @@ object StreamingDedup {
 
   /** Every near-dup pair discovered so far (id1, id2, jaccard, epoch). */
   def pairs(spark: SparkSession, cfg: Config): DataFrame = {
-    val dir = new java.io.File(s"${cfg.stateDir}/pairs")
-    if (dir.isDirectory) spark.read.parquet(dir.toString)
+    val dir = new Path(s"${cfg.stateDir}/pairs")
+    if (dir.getFileSystem(spark.sessionState.newHadoopConf()).exists(dir))
+      spark.read.parquet(dir.toString)
     else spark.emptyDataFrame
   }
 
@@ -156,23 +158,7 @@ object StreamingDedup {
     * epochs, delete the rest (corpus/index/pairs are append-only DATA —
     * they never get GC'd here; only the vocab-sized per-epoch df
     * snapshots are redundant history). Same safety argument as
-    * [[StreamingStats.retain]]: the serving pointer is the MAX epoch,
-    * old deletions never move it, crash mid-GC only leaves orphans for
-    * the next sweep. Returns the dropped epoch ids. */
-  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val latest = latestEpoch(cfg)
-    require(latest >= 0, s"state at ${cfg.stateDir} not initialized")
-    val cutoff = latest - keepLast + 1
-    val base = new org.apache.hadoop.fs.Path(s"${cfg.stateDir}/shingle_df")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dropped = scala.collection.mutable.SortedSet.empty[Long]
-    if (fs.exists(base)) fs.listStatus(base).foreach { st =>
-      StreamingStats.epochOf(st.getPath.getName).filter(_ < cutoff).foreach { ep =>
-        dropped += ep
-        fs.delete(st.getPath, true)
-      }
-    }
-    dropped.toSeq
-  }
+    * [[StreamingStats.retain]]. Returns the dropped epoch ids. */
+  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] =
+    StreamingStats.retainEpochs(spark, dfTable(cfg), keepLast)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.io.Sinks
+import graft.io.Versioned
 import graft.ops.Merge
 
 /** Streaming ingest wired to incremental AGGREGATION maintenance: a
@@ -17,19 +17,24 @@ import graft.ops.Merge
   * dashboard, maintained without ever rescanning history (the batch
   * sibling of [[StreamingDedup]]; reference has no streaming at all).
   *
-  * State layout under `stateDir` (all parquet, written with [[Sinks]]):
-  * one `family/epoch=N/` snapshot per state family per epoch. Snapshots
-  * are STATE-sized (key × value-cardinality for histograms, key count
-  * for the rest), never data-sized, so a snapshot per epoch stays cheap
-  * at any corpus scale.
+  * State layout: `stateDir` is a [[Versioned]] table, and epoch N is
+  * its version N+1 (`<stateDir>/v=N+1/<family>/`, parquet, one dir per
+  * state family, written by [[Versioned.writeParts]]). Snapshots are
+  * STATE-sized (key × value-cardinality for histograms, key count for
+  * the rest), never data-sized, so a snapshot per epoch stays cheap at
+  * any corpus scale.
   *
   * Epoch discipline (same as [[StreamingDedup]]): epoch N+1's snapshot
-  * = merge(read-back epoch-N snapshot, batch partial) — merges always
-  * serve from storage, so restart after any fully-written epoch resumes
-  * exactly, and the ONLY driver scalar is the epoch counter recovered
-  * from the directory listing. Batches must be row-disjoint (the
-  * counting-state contract); the distinct state is additionally safe
-  * under value overlap by construction.
+  * = merge(read-back epoch-N snapshot, batch partial), and every family
+  * of it commits by ONE rename — a failed or crashed fold leaves only a
+  * dot-prefixed staging dir, never a partial epoch, so the previous
+  * epoch keeps serving and a replay of the batch folds from it. Merges
+  * always serve from storage, and the ONLY driver scalar is the epoch
+  * counter, recovered from the version listing (Hadoop FS API: local,
+  * `file:`, `hdfs://` and `s3a://` state dirs alike). [[retain]] drops
+  * whole old epochs. Batches must be row-disjoint (the counting-state
+  * contract); the distinct state is additionally safe under value
+  * overlap by construction.
   */
 object StreamingStats {
 
@@ -80,52 +85,55 @@ object StreamingStats {
     Merge.bloomPositionsFast(col(cfg.freqCol).cast("string"),
       cfg.cmsWidth, cfg.cmsDepth)
 
-  private def snapDir(cfg: Config, family: String, epoch: Long) =
-    s"${cfg.stateDir}/$family/epoch=$epoch"
+  // Epoch N of a streaming state table is its Versioned version N+1
+  // (init commits v=1 as epoch 0); both streaming sinks map through
+  // these two defs only.
+  private[streaming] def versionOf(epoch: Long): Long = epoch + 1
+  private[streaming] def epochOf(version: Long): Long = version - 1
 
-  /** Parse an `epoch=N` snapshot dir name; None for anything else,
-    * including a malformed suffix (`epoch=tmp` from an interrupted
-    * write) — malformed names must never abort a GC sweep. */
-  private[streaming] def epochOf(name: String): Option[Long] =
-    if (name.startsWith("epoch=")) name.stripPrefix("epoch=").toLongOption
-    else None
+  /** Latest committed epoch of the [[Versioned]] table at `table`; -1
+    * before init. */
+  private[streaming] def latestEpochOf(table: String): Long =
+    Versioned.latestVersion(SparkSession.active, table).fold(-1L)(epochOf)
 
-  /** Highest epoch with a written stats snapshot; -1 before init. The
-    * stats family is written LAST in [[processBatch]], so its presence
-    * marks the whole epoch complete (a crash mid-epoch leaves the
-    * previous epoch authoritative and the next run overwrites the
-    * partial one). */
-  def latestEpoch(cfg: Config): Long = {
-    val base = new java.io.File(s"${cfg.stateDir}/stats")
-    Option(base.listFiles()).toSeq.flatten
-      .flatMap(f => epochOf(f.getName))
-      .foldLeft(-1L)(math.max)
+  /** Drop all but the newest `keepLast` epochs of `table`; returns the
+    * dropped epochs. */
+  private[streaming] def retainEpochs(spark: SparkSession, table: String,
+                                      keepLast: Int): Seq[Long] = {
+    require(latestEpochOf(table) >= 0, s"state at $table not initialized")
+    Versioned.retain(spark, table, keepLast).map(epochOf)
   }
 
-  private def partials(df: DataFrame, cfg: Config): Seq[(String, DataFrame)] =
-    (if (cfg.sampleIdCols.nonEmpty)
-      Seq("sample" -> Merge.partialSampleState(df, cfg.keys,
-        Merge.samplePriorityFast(cfg.sampleIdCols), cfg.sampleK))
-    else Nil) ++
-    (if (cfg.kmvK > 0)
-      Seq("kmv" -> Merge.kmvState(df, cfg.keys.head,
-        Merge.samplePriorityFast(Seq(cfg.distinctCol)), cfg.kmvK))
-    else Nil) ++
-    (if (cfg.bloomBits > 0)
-      Seq("bloom" -> Merge.bloomState(df, cfg.keys, bloomPos(cfg)))
-    else Nil) ++
-    (if (cfg.cmsWidth > 0)
-      Seq("cms" -> Merge.cmsState(df, cfg.keys, cmsPos(cfg)))
-    else Nil) ++
-    (if (cfg.hllLgK > 0)
-      Seq("hll" -> Merge.hllDistinctState(df, cfg.keys, cfg.distinctCol, cfg.hllLgK))
-    else Nil) ++ Seq(
-    "quantile" -> Merge.partialQuantileState(df, cfg.keys, cfg.valueCol),
-    "distinct" -> Merge.partialDistinctState(df, cfg.keys, cfg.distinctCol),
-    "moment"   -> Merge.partialMomentState(df, cfg.keys, cfg.valueCol),
-    "freq"     -> Merge.partialFreqState(df, cfg.keys, cfg.freqCol),
-    // stats last — it is the epoch-completeness marker (see latestEpoch)
-    "stats"    -> Merge.partialStats(df, cfg.keys, cfg.valueCol))
+  /** Highest committed epoch; -1 before init. */
+  def latestEpoch(cfg: Config): Long = latestEpochOf(cfg.stateDir)
+
+  private def snapshot(spark: SparkSession, cfg: Config, family: String, epoch: Long) =
+    Versioned.readPart(spark, cfg.stateDir, family, versionOf(epoch))
+
+  /** Commit one state snapshot per family as the next epoch; returns it.
+    * repartition(1): snapshots are state-sized, one file each, and an
+    * EMPTY state still writes a schema-bearing part file. */
+  private def commitEpoch(spark: SparkSession, cfg: Config,
+                          states: Seq[(String, DataFrame)]): Long =
+    epochOf(Versioned.writeParts(spark, cfg.stateDir,
+      states.map { case (family, st) => family -> st.repartition(1) }))
+
+  /** One family's state over `df` — a batch partial, or a from-scratch
+    * state over a whole corpus. */
+  private def partial(df: DataFrame, cfg: Config, family: String): DataFrame = family match {
+    case "stats"    => Merge.partialStats(df, cfg.keys, cfg.valueCol)
+    case "quantile" => Merge.partialQuantileState(df, cfg.keys, cfg.valueCol)
+    case "distinct" => Merge.partialDistinctState(df, cfg.keys, cfg.distinctCol)
+    case "moment"   => Merge.partialMomentState(df, cfg.keys, cfg.valueCol)
+    case "freq"     => Merge.partialFreqState(df, cfg.keys, cfg.freqCol)
+    case "sample"   => Merge.partialSampleState(df, cfg.keys,
+      Merge.samplePriorityFast(cfg.sampleIdCols), cfg.sampleK)
+    case "kmv"      => Merge.kmvState(df, cfg.keys.head,
+      Merge.samplePriorityFast(Seq(cfg.distinctCol)), cfg.kmvK)
+    case "bloom"    => Merge.bloomState(df, cfg.keys, bloomPos(cfg))
+    case "cms"      => Merge.cmsState(df, cfg.keys, cmsPos(cfg))
+    case "hll"      => Merge.hllDistinctState(df, cfg.keys, cfg.distinctCol, cfg.hllLgK)
+  }
 
   private def mergeFamily(cfg: Config, family: String,
                           states: Seq[DataFrame]): DataFrame = family match {
@@ -146,12 +154,8 @@ object StreamingStats {
     * archive would have left them. */
   def init(spark: SparkSession, cfg: Config, archive: DataFrame): Unit = {
     require(latestEpoch(cfg) < 0, s"state at ${cfg.stateDir} already initialized")
-    // repartition(1): snapshots are state-sized; one file each, and an
-    // EMPTY archive still writes a schema-bearing part file
     val src = archive.localCheckpoint()
-    partials(src, cfg).foreach { case (family, st) =>
-      Sinks.parquet(st.repartition(1), snapDir(cfg, family, 0))
-    }
+    commitEpoch(spark, cfg, families(cfg).map(f => f -> partial(src, cfg, f)))
   }
 
   /** The foreachBatch body — also the batch-mode loop body (StreamStatsSpec
@@ -162,12 +166,8 @@ object StreamingStats {
     require(epoch >= 0, s"state at ${cfg.stateDir} not initialized — call init() first")
     // snapshot the micro-batch once; it feeds every family's partial
     val src = batch.localCheckpoint()
-    partials(src, cfg).foreach { case (family, part) =>
-      val prev = spark.read.parquet(snapDir(cfg, family, epoch))
-      Sinks.parquet(
-        mergeFamily(cfg, family, Seq(prev, part)).repartition(1),
-        snapDir(cfg, family, epoch + 1))
-    }
+    commitEpoch(spark, cfg, families(cfg).map(f =>
+      f -> mergeFamily(cfg, f, Seq(snapshot(spark, cfg, f, epoch), partial(src, cfg, f)))))
   }
 
   /** Attach the sink to a stream carrying the configured columns. */
@@ -192,7 +192,7 @@ object StreamingStats {
       s"unknown state family '$family' (configured: ${families(cfg).mkString(",")})")
     val epoch = latestEpoch(cfg)
     require(epoch >= 0, s"state at ${cfg.stateDir} not initialized")
-    spark.read.parquet(snapDir(cfg, family, epoch))
+    snapshot(spark, cfg, family, epoch)
   }
 
   /** The dashboard: per-key count/sum/avg/min/max + distinct count +
@@ -296,82 +296,32 @@ object StreamingStats {
     val epoch = latestEpoch(cfg)
     require(epoch >= 0, s"state at ${cfg.stateDir} not initialized")
     val fg = forgotten.localCheckpoint()
-    def cur(family: String) = spark.read.parquet(snapDir(cfg, family, epoch))
-    val next: Seq[(String, DataFrame)] =
-      (if (cfg.sampleIdCols.nonEmpty)
-        Seq("sample" -> Merge.retractBottomKState(cur("sample"), fg, survivors, cfg.keys)(
-          Merge.partialSampleState(_, cfg.keys,
-            Merge.samplePriorityFast(cfg.sampleIdCols), cfg.sampleK)))
-      else Nil) ++
-      (if (cfg.kmvK > 0)
-        Seq("kmv" -> Merge.retractBottomKState(cur("kmv"), fg, survivors, Seq(cfg.keys.head))(
-          Merge.kmvState(_, cfg.keys.head,
-            Merge.samplePriorityFast(Seq(cfg.distinctCol)), cfg.kmvK)))
-      else Nil) ++
-      (if (cfg.bloomBits > 0)
-        Seq("bloom" -> Merge.bloomState(survivors, cfg.keys, bloomPos(cfg)))
-      else Nil) ++
-      (if (cfg.cmsWidth > 0)
-        Seq("cms" -> Merge.retractCmsState(cur("cms"),
-          Merge.cmsState(fg, cfg.keys, cmsPos(cfg)), cfg.keys))
-      else Nil) ++
-      (if (cfg.hllLgK > 0)
-        Seq("hll" -> Merge.hllDistinctState(survivors, cfg.keys, cfg.distinctCol, cfg.hllLgK))
-      else Nil) ++ Seq(
-      "quantile" -> Merge.retractHistState(cur("quantile"),
-        Merge.partialQuantileState(fg, cfg.keys, cfg.valueCol), cfg.keys),
-      "distinct" -> Merge.retractDistinctState(cur("distinct"), fg, survivors,
-        cfg.keys, cfg.distinctCol),
-      "moment"   -> Merge.retractMomentState(cur("moment"),
-        Merge.partialMomentState(fg, cfg.keys, cfg.valueCol), cfg.keys),
-      "freq"     -> Merge.retractHistState(cur("freq"),
-        Merge.partialFreqState(fg, cfg.keys, cfg.freqCol), cfg.keys),
-      // stats last — the epoch-completeness marker, as in processBatch
-      "stats"    -> Merge.retractStats(cur("stats"), fg, survivors,
-        cfg.keys, cfg.valueCol))
-    next.foreach { case (family, st) =>
-      graft.io.Sinks.parquet(st.repartition(1), snapDir(cfg, family, epoch + 1))
-    }
-    epoch + 1
+    commitEpoch(spark, cfg, families(cfg).map { f =>
+      lazy val cur = snapshot(spark, cfg, f, epoch)
+      f -> (f match {
+        case "stats"    => Merge.retractStats(cur, fg, survivors, cfg.keys, cfg.valueCol)
+        case "quantile" | "freq" => Merge.retractHistState(cur, partial(fg, cfg, f), cfg.keys)
+        case "moment"   => Merge.retractMomentState(cur, partial(fg, cfg, f), cfg.keys)
+        case "cms"      => Merge.retractCmsState(cur, partial(fg, cfg, f), cfg.keys)
+        case "distinct" =>
+          Merge.retractDistinctState(cur, fg, survivors, cfg.keys, cfg.distinctCol)
+        case "sample"   =>
+          Merge.retractBottomKState(cur, fg, survivors, cfg.keys)(partial(_, cfg, f))
+        case "kmv"      =>
+          Merge.retractBottomKState(cur, fg, survivors, Seq(cfg.keys.head))(partial(_, cfg, f))
+        case "bloom" | "hll" => partial(survivors, cfg, f) // irreversible: rebuilt
+      })
+    })
   }
 
-  /** Epoch-snapshot GC: keep the newest `keepLast` epochs per family,
-    * delete the rest. Snapshots are state-sized but one lands per family
-    * per micro-batch — a month of minutely batches is ~43k dirs per
-    * family without retention. Safe by construction: [[latestEpoch]]
-    * reads the MAX stats epoch, so deleting OLD epochs never moves the
-    * serving pointer; only epochs strictly below `latest − keepLast + 1`
-    * go; a crash mid-GC leaves older orphans the next retain sweeps;
-    * `_applied/` replay markers guard batch ids, not epochs, and are
-    * untouched. Returns the dropped epoch ids. Hadoop FS API, so
-    * local/HDFS/S3A share the code (the compactParquet discipline). */
-  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val latest = latestEpoch(cfg)
-    require(latest >= 0, s"state at ${cfg.stateDir} not initialized")
-    val cutoff = latest - keepLast + 1
-    val dropped = scala.collection.mutable.SortedSet.empty[Long]
-    val conf = spark.sparkContext.hadoopConfiguration
-    // enumerate ON-DISK family dirs, not families(cfg): a family later
-    // disabled in the config (cms turned off) would otherwise never be
-    // GC'd; config-unknown dirs (`_applied`, stray files) are skipped
-    // because only `epoch=N` children are touched
-    val root = new org.apache.hadoop.fs.Path(cfg.stateDir)
-    val fs = root.getFileSystem(conf)
-    val onDisk =
-      if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-          .filterNot(_.startsWith("_")).toSeq
-      else Seq.empty
-    (onDisk ++ families(cfg)).distinct.foreach { family =>
-      val base = new org.apache.hadoop.fs.Path(s"${cfg.stateDir}/$family")
-      if (fs.exists(base)) fs.listStatus(base).foreach { st =>
-        epochOf(st.getPath.getName).filter(_ < cutoff).foreach { ep =>
-          dropped += ep
-          fs.delete(st.getPath, true)
-        }
-      }
-    }
-    dropped.toSeq
-  }
+  /** Epoch-snapshot GC: keep the newest `keepLast` epochs, delete the
+    * rest — every family of an epoch goes with it, including families a
+    * later config no longer maintains. Snapshots are state-sized but one
+    * epoch lands per micro-batch: a month of minutely batches is ~43k
+    * epochs without retention. Safe by construction ([[Versioned.retain]]):
+    * the serving epoch is the newest and is always kept, and `_applied/`
+    * replay markers guard batch ids, not epochs, and are untouched.
+    * Returns the dropped epoch ids. */
+  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] =
+    retainEpochs(spark, cfg.stateDir, keepLast)
 }

@@ -827,6 +827,18 @@ class PlanSpec extends AnyFunSuite {
       s"driver-action sites changed — justify and re-allowlist:\nfound:   $found\nallowed: $allowed")
   }
 
+  test("state-path audit: persisted-state code reaches storage through the Hadoop FS API, never java.io.File") {
+    // java.io.File sees only the local disk: a `file:`, `hdfs://` or
+    // `s3a://` path lists as empty, so an epoch discovery built on it
+    // reads "not initialized" for every such state dir
+    val fileApi = """java\.io\.(File\b|_|\{[^}]*\bFile\b)""".r
+    val found = mainSourceLines.filter { case (file, line) =>
+      Seq("streaming/", "io/", "ops/", "pipeline/").exists(file.startsWith) &&
+        fileApi.findFirstIn(line).isDefined
+    }
+    assert(found.isEmpty, s"java.io.File in persisted-state code:\n${found.mkString("\n")}")
+  }
+
   test("broadcast-hint audit: every broadcast() site is an enumerated sliver-sized frame") {
     // llm1's corpus-fraction drop-set broadcast (removed in round 7) is
     // the failure mode this guards: a broadcast() hint on anything that

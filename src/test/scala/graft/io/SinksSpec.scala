@@ -146,7 +146,8 @@ class SinksSpec extends AnyFunSuite {
       .orderBy("l_orderkey", "l_partkey", "l_quantity")
       .collect().map(_.toSeq).toSeq
     assert(back == want)
-    assert(!new java.io.File(dir + ".__compact_tmp").exists())
+    assert(!new java.io.File(dir + ".refresh-staging").exists())
+    assert(!new java.io.File(dir + ".refresh-retired").exists())
     // idempotent: compacting a compacted dir keeps content and shrinks nothing
     val rep2 = Sinks.compactParquet(spark, dir, targetBytes = 1L * 1024 * 1024 * 1024)
     assert(rep2.rows == rep.rows && rep2.filesBefore == rep.filesAfter)
@@ -154,5 +155,28 @@ class SinksSpec extends AnyFunSuite {
     // missing dir fails loudly
     intercept[IllegalArgumentException](
       Sinks.compactParquet(spark, dir + "_nope"))
+  }
+
+  test("compactParquet heals a swap that crashed between its renames: content == an uncrashed run") {
+    val df = Tables.lineitem(spark, TestSpark.sfDir)
+      .select("l_orderkey", "l_partkey", "l_quantity")
+    val base = Files.createTempDirectory("graft-compact-crash").toString
+    val target = 1L * 1024 * 1024 * 1024
+    val ok = s"$base/ok"
+    df.repartition(16).write.parquet(ok)
+    Sinks.compactParquet(spark, ok, target)
+    // the crash window: the original retired by the first rename, the
+    // complete rewrite beside it, nothing at the path itself
+    val dir = s"$base/t"
+    df.repartition(16).write.parquet(dir)
+    Sinks.parquetSizedMaterialized(spark.read.parquet(dir), s"$dir.refresh-staging", target)
+    assert(new java.io.File(dir).renameTo(new java.io.File(s"$dir.refresh-retired")))
+    val rep = Sinks.compactParquet(spark, dir, target)
+    def rows(d: String) = spark.read.parquet(d)
+      .orderBy("l_orderkey", "l_partkey", "l_quantity").collect().map(_.toSeq).toSeq
+    assert(rows(dir) == rows(ok))
+    assert(rep.rows == df.count() && parquetFiles(dir).size == parquetFiles(ok).size)
+    assert(!new java.io.File(s"$dir.refresh-staging").exists())
+    assert(!new java.io.File(s"$dir.refresh-retired").exists())
   }
 }

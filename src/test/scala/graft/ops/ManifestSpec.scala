@@ -110,4 +110,21 @@ class ManifestSpec extends AnyFunSuite {
       "z-order box query should skip curve segments")
     assert(pruned.count() == 16L * 16)
   }
+
+  test("appendManifest heals a swap that crashed between its renames: manifest == an uncrashed run") {
+    val dir = clusteredDir()
+    Seq((91000L, 20, 300)).toDF("id", "x", "y").coalesce(1).write.mode("append").parquet(dir)
+    Manifest.appendManifest(spark, dir, Seq("x", "y"))
+    val mp = Manifest.manifestPath(dir)
+    val want = spark.read.parquet(mp).collect().map(_.toSeq).toSet
+    // the next appendManifest's crash window: the manifest retired by the
+    // first rename, its complete rewrite beside it, nothing at the path
+    spark.read.parquet(mp).write.parquet(s"$mp.refresh-staging")
+    assert(new java.io.File(mp).renameTo(new java.io.File(s"$mp.refresh-retired")))
+    Manifest.appendManifest(spark, dir, Seq("x", "y"))
+    assert(spark.read.parquet(mp).collect().map(_.toSeq).toSet == want)
+    assert(!new java.io.File(s"$mp.refresh-staging").exists())
+    assert(!new java.io.File(s"$mp.refresh-retired").exists())
+    assert(Manifest.prunedScan(spark, dir, Seq(("y", 300.0, 300.0))).count() == 1)
+  }
 }

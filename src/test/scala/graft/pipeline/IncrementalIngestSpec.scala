@@ -241,4 +241,26 @@ class IncrementalIngestSpec extends AnyFunSuite {
     assert(Versioned.read(spark, p.shingleDf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap == joint)
   }
+
+  test("a forget that crashed between deleting the rewritten files and moving the rewrite in is finished by its re-run") {
+    val docs = graft.model.Tables.documents(spark, TestSpark.sfDir)
+    val root = Files.createTempDirectory("graft-forget-crash").toString + "/state"
+    val p = IncrementalIngest.init(spark, docs.filter(col("doc_id") < 350L), root)
+    IncrementalIngest.ingest(spark, docs.filter(col("doc_id") >= 350L), root)
+    val forgetIds = docs.filter(col("doc_id") % 17 === 3).select("doc_id").localCheckpoint()
+    IncrementalIngest.preMoveHook = () => throw new IllegalStateException("crash before the move")
+    try intercept[IllegalStateException](IncrementalIngest.forget(spark, forgetIds, root))
+    finally IncrementalIngest.preMoveHook = () => ()
+    IncrementalIngest.forget(spark, forgetIds, root)
+
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "text").orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val archive = spark.read.parquet(p.archive)
+    assert(sorted(archive) == sorted(docs.join(forgetIds, Seq("doc_id"), "left_anti")))
+    val manifest = spark.read.parquet(graft.ops.Manifest.manifestPath(p.archive))
+    def key(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    assert(manifest.select("file").collect().map(r => key(r.getString(0))).toSet ==
+      archive.inputFiles.map(key).toSet)
+    assert(manifest.agg(sum("n_rows")).head().getLong(0) == archive.count())
+  }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.io.Versioned
 import graft.model.Tables
 
 /** §2.10 stateful streaming dedup: dropDuplicatesWithinWatermark removes
@@ -96,8 +97,8 @@ class StreamDedupSpec extends AnyFunSuite {
     // final snapshot equals a from-scratch recompute over everything seen
     // (merge-based maintenance lost nothing)
     assert(StreamingDedup.latestEpoch(streamCfg) == 2L)
-    val finalTable = spark.read
-      .parquet(s"${streamCfg.stateDir}/shingle_df/epoch=2")
+    val finalTable = Versioned // epoch 2 is version 3
+      .read(spark, s"${streamCfg.stateDir}/shingle_df", Some(3L))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val recomputed = graft.ops.Dedup.shingleDfTable(
       graft.ops.Dedup.shingleDF(archive.union(batch1).union(batch2)))
@@ -252,15 +253,15 @@ class StreamDedupSpec extends AnyFunSuite {
       Seq((2L, "k l m n o p q r s t")).toDF("doc_id", "text"))
     StreamingDedup.processBatch(spark, cfg,
       Seq((3L, "u v w x y z a1 b1 c1 d1")).toDF("doc_id", "text"))
-    val dfBefore = spark.read
-      .parquet(s"${cfg.stateDir}/shingle_df/epoch=${StreamingDedup.latestEpoch(cfg)}")
+    val dfBefore = Versioned
+      .read(spark, s"${cfg.stateDir}/shingle_df", Some(StreamingDedup.latestEpoch(cfg) + 1))
       .collect().map(_.toSeq).toSet
     assert(StreamingDedup.retain(spark, cfg, keepLast = 1) == Seq(0L, 1L))
     assert(StreamingDedup.latestEpoch(cfg) == 2L)
     val names = Option(new java.io.File(s"${cfg.stateDir}/shingle_df").listFiles())
-      .toSeq.flatten.map(_.getName).filter(_.startsWith("epoch=")).toSet
-    assert(names == Set("epoch=2"))
-    assert(spark.read.parquet(s"${cfg.stateDir}/shingle_df/epoch=2")
+      .toSeq.flatten.map(_.getName).filter(_.startsWith("v=")).toSet
+    assert(names == Set("v=3")) // epoch 2
+    assert(spark.read.parquet(s"${cfg.stateDir}/shingle_df/v=3")
       .collect().map(_.toSeq).toSet == dfBefore)
     // append-only data dirs untouched; the sink still folds after GC
     assert(spark.read.parquet(s"${cfg.stateDir}/corpus").count() == 3)
@@ -268,5 +269,63 @@ class StreamDedupSpec extends AnyFunSuite {
       Seq((4L, "e1 f1 g1 h1 i1 j1 k1 l1 m1 n1")).toDF("doc_id", "text"))
     assert(StreamingDedup.latestEpoch(cfg) == 3L)
     intercept[IllegalArgumentException](StreamingDedup.retain(spark, cfg, 0))
+  }
+
+  private def docs(rows: (Long, String)*) = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+  private val archive3 = docs((1L, "a b c d e f g h i j"), (3L, "z y x w v u t s r q"))
+  private val batch3a = docs((100L, "a b c d e f g h i j"), (102L, "m n o p q r s t u v"))
+  private val batch3b = docs((200L, "a b c d e f g h i j"), (201L, "m n o p q r s t u v"))
+
+  /** The served pairs and the append-only corpus and index. */
+  private def served(cfg: StreamingDedup.Config) = Seq(
+    StreamingDedup.pairs(spark, cfg),
+    spark.read.parquet(s"${cfg.stateDir}/corpus"),
+    spark.read.parquet(s"${cfg.stateDir}/index"))
+    .map(_.collect().map(_.toSeq).toSet)
+
+  private def latestDf(cfg: StreamingDedup.Config) =
+    Versioned.read(spark, s"${cfg.stateDir}/shingle_df").collect().map(_.toSeq).toSet
+
+  test("a failed shingle-df write leaves the serving epoch; the replayed batch id folds as if it never failed") {
+    val root = Files.createTempDirectory("graft-sd-fault").toString
+    val clean = StreamingDedup.Config(s"$root/clean")
+    StreamingDedup.init(spark, clean, archive3)
+    StreamingDedup.applyBatch(batch3a, clean, batchId = 0)
+    StreamingDedup.applyBatch(batch3b, clean, batchId = 1)
+
+    val cfg = StreamingDedup.Config(s"$root/state")
+    StreamingDedup.init(spark, cfg, archive3)
+    StreamingDedup.applyBatch(batch3a, cfg, batchId = 0)
+    val before = served(cfg)
+    FailStateCommit.during(spark) {
+      intercept[Exception](StreamingDedup.applyBatch(batch3b, cfg, batchId = 1))
+    }
+    assert(StreamingDedup.latestEpoch(cfg) == 1L)
+    assert(served(cfg) == before)
+    StreamingDedup.applyBatch(batch3b, cfg, batchId = 1)
+    assert(StreamingDedup.latestEpoch(cfg) == 2L)
+    assert(served(cfg) == served(clean))
+    assert(latestDf(cfg) == latestDf(clean))
+  }
+
+  test("a file: URI state dir folds, retains and serves exactly like a plain path") {
+    val root = Files.createTempDirectory("graft-sd-uri").toString
+    def run(dir: String) = {
+      val cfg = StreamingDedup.Config(dir)
+      StreamingDedup.init(spark, cfg, archive3)
+      StreamingDedup.processBatch(spark, cfg, batch3a)
+      StreamingDedup.processBatch(spark, cfg, batch3b)
+      assert(StreamingDedup.latestEpoch(cfg) == 2L, dir)
+      assert(StreamingDedup.retain(spark, cfg, keepLast = 1) == Seq(0L, 1L), dir)
+      (cfg, served(cfg))
+    }
+    val (plainCfg, plain) = run(s"$root/plain")
+    assert(plain.head.nonEmpty, "fixture should surface near-dup pairs")
+    val (uriCfg, uri) = run(s"file:$root/uri")
+    assert(uri == plain)
+    assert(latestDf(uriCfg) == latestDf(plainCfg))
   }
 }

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -271,10 +274,12 @@ class StreamStatsSpec extends AnyFunSuite {
     assert(StreamingStats.retain(spark, c, keepLast = 1) == Seq(0L, 1L))
     assert(StreamingStats.latestEpoch(c) == 2L)
     assert(stateSnapshot(c) == before) // the serving snapshot never moved
+    // epoch 2 is version 3: the only version left, holding every family
+    val names = Option(new java.io.File(s"$root/state").listFiles())
+      .toSeq.flatten.map(_.getName).filter(_.startsWith("v=")).toSet
+    assert(names == Set("v=3"), s"kept: $names")
     StreamingStats.families(c).foreach { f =>
-      val names = Option(new java.io.File(s"$root/state/$f").listFiles())
-        .toSeq.flatten.map(_.getName).filter(_.startsWith("epoch=")).toSet
-      assert(names == Set("epoch=2"), s"family $f kept: $names")
+      assert(new java.io.File(s"$root/state/v=3/$f").isDirectory, s"family $f missing from v=3")
     }
     // the sink keeps folding after GC (empty batch is trivially row-disjoint)
     StreamingStats.processBatch(spark, c, li.filter(lit(false)))
@@ -347,5 +352,74 @@ class StreamStatsSpec extends AnyFunSuite {
     val bogus = all.limit(5).withColumn("l_quantity", lit(123456.0))
     intercept[Exception](StreamingStats.forget(spark, c, bogus, survivors))
     assert(StreamingStats.latestEpoch(c) == 3L)
+  }
+
+  private val tinyCols = Seq("l_returnflag", "l_linestatus", "l_quantity", "l_partkey",
+    "l_orderkey", "l_linenumber")
+  private def tiny(rows: (String, String, Double, Long, Long, Int)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF(tinyCols: _*)
+  }
+  private val tinyArchive = tiny(("A", "O", 5.0, 10L, 1L, 1), ("B", "F", 3.0, 11L, 2L, 1))
+  private val tinyB1 = tiny(("A", "F", 7.0, 10L, 3L, 1), ("A", "O", 2.0, 12L, 4L, 1))
+  private val tinyB2 = tiny(("B", "F", 9.0, 11L, 5L, 1), ("C", "O", 1.0, 13L, 6L, 1))
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq: Seq[Any]).toSet
+
+  test("a failed stats write leaves the serving epoch; the replayed batch id folds as if it never failed") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ss-fault").toString
+    val clean = cfg(s"$root/clean")
+    StreamingStats.init(spark, clean, tinyArchive)
+    StreamingStats.applyBatch(tinyB1, clean, batchId = 0)
+    StreamingStats.applyBatch(tinyB2, clean, batchId = 1)
+
+    val c = cfg(s"$root/state")
+    StreamingStats.init(spark, c, tinyArchive)
+    StreamingStats.applyBatch(tinyB1, c, batchId = 0)
+    val served = rowSet(StreamingStats.dashboard(spark, c))
+    FailStateCommit.during(spark) {
+      intercept[Exception](StreamingStats.applyBatch(tinyB2, c, batchId = 1))
+    }
+    assert(StreamingStats.latestEpoch(c) == 1L)
+    assert(rowSet(StreamingStats.dashboard(spark, c)) == served)
+    StreamingStats.applyBatch(tinyB2, c, batchId = 1)
+    assert(StreamingStats.latestEpoch(c) == 2L)
+    assert(stateSnapshot(c) == stateSnapshot(clean))
+  }
+
+  test("a file: URI state dir folds, retains and serves exactly like a plain path") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ss-uri").toString
+    def run(dir: String) = {
+      val c = cfg(dir)
+      StreamingStats.init(spark, c, tinyArchive)
+      StreamingStats.processBatch(spark, c, tinyB1)
+      StreamingStats.processBatch(spark, c, tinyB2)
+      assert(StreamingStats.latestEpoch(c) == 2L, dir)
+      assert(StreamingStats.retain(spark, c, keepLast = 1) == Seq(0L, 1L), dir)
+      (stateSnapshot(c), rowSet(StreamingStats.dashboard(spark, c)))
+    }
+    assert(run(s"file:$root/uri") == run(s"$root/plain"))
+  }
+}
+
+/** Commit protocol that fails `commitJob` for any write into a path with
+  * a `stats` or `shingle_df` segment — the streaming sinks' epoch-marking
+  * state writes — after its tasks have written their files. */
+class FailStateCommit(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    if (path.split('/').exists(s => s == "stats" || s == "shingle_df"))
+      throw new java.io.IOException(s"commit refused: $path")
+    else super.commitJob(jobContext, taskCommits)
+}
+
+object FailStateCommit {
+  private val Key = "spark.sql.sources.commitProtocolClass"
+
+  /** Run `body` with every state write's job commit failing. */
+  def during[T](spark: SparkSession)(body: => T): T = {
+    val before = spark.conf.getOption(Key)
+    spark.conf.set(Key, classOf[FailStateCommit].getName)
+    try body finally before.fold(spark.conf.unset(Key))(spark.conf.set(Key, _))
   }
 }

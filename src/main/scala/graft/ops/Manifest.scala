@@ -72,19 +72,8 @@ object Manifest {
   def appendManifest(spark: SparkSession, dataPath: String,
                      cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "appendManifest needs at least one column")
-    def key(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
     val old = read(spark, dataPath).localCheckpoint()
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) buf += f.toString
-      }
-      buf.toList
-    }
+    val live = liveFiles(spark, dataPath)
     val known = old.select("file").collect().map(_.getString(0)).map(key).toSet
     val fresh = live.filterNot(f => known.contains(key(f)))
     // still-live known rows via a semi-join on the normalized path — an
@@ -107,6 +96,21 @@ object Manifest {
       merged.coalesce(1).write.parquet(_))
   }
 
+  /** [[udfFreeKey]] of one file name. */
+  private def key(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
+
+  /** Every live `.parquet` file under `dataPath` (recursive FS listing). */
+  private def liveFiles(spark: SparkSession, dataPath: String): List[String] = {
+    val p = new org.apache.hadoop.fs.Path(dataPath)
+    val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    val buf = scala.collection.mutable.ListBuffer.empty[String]
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet")) buf += f.toString
+    }
+    buf.toList
+  }
+
   /** Scheme-stripped URI path of a file column — `input_file_name()`
     * yields `file:///...` while FS listings yield `file:/...`; both
     * normalize to the bare path. Pure Catalyst (no UDF). */
@@ -118,15 +122,17 @@ object Manifest {
     * from the persisted manifest's own schema (`<c>_min` stat columns),
     * so callers that rewrite data need no column bookkeeping. No-op
     * when no manifest exists. [[graft.io.Sinks.compactParquet]] calls
-    * this after its swap — a stale manifest referencing deleted files
-    * would otherwise fail every [[prunedScan]]. */
+    * this after its swap, when every live file is new to the manifest.
+    * Rebuilt through [[appendManifest]], so a failed refresh leaves the
+    * old manifest serving (stale entries cost [[prunedScan]] pruning
+    * power, never rows). */
   def refreshIfPresent(spark: SparkSession, dataPath: String): Unit = {
     val mp = new org.apache.hadoop.fs.Path(manifestPath(dataPath))
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(mp)) {
-      val cols = spark.read.parquet(mp.toString).columns.toSeq
+      val cols = read(spark, dataPath).columns.toSeq
         .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
-      writeManifest(spark, dataPath, cols)
+      appendManifest(spark, dataPath, cols)
     }
   }
 
@@ -156,24 +162,11 @@ object Manifest {
     }
     // driver file LISTS — metadata-scale (one string per file), the
     // exact structure Spark's FileIndex holds for every scan; this is
-    // planning, not a data funnel (registered in PlanSpec's audit).
-    // Keys are scheme-stripped URI paths: input_file_name() yields
-    // file:///... while FS listings yield file:/... — same file.
-    def key(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
+    // planning, not a data funnel (registered in PlanSpec's audit)
     val surviving = keep.select("file").collect().map(_.getString(0)).map(key).toSet
     val known = m.select("file").collect().map(_.getString(0)).map(key).toSet
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) buf += f.toString
-      }
-      buf.toList
-    }
-    val files = live.filter(f => surviving.contains(key(f)) || !known.contains(key(f)))
+    val files = liveFiles(spark, dataPath)
+      .filter(f => surviving.contains(key(f)) || !known.contains(key(f)))
     val pred = ranges
       .map { case (c, lo, hi) => col(c).cast("double").between(lo, hi) }
       .reduce(_ && _)

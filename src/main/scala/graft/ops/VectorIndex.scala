@@ -81,7 +81,7 @@ object VectorIndex {
     * replay == batch loop through it). */
   def attach(stream: DataFrame, root: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    // StreamGuard-admitted, like every attach funnel (see StreamingDedup)
+    // StreamGuard-admitted, like every attach funnel
     graft.streaming.StreamGuard.admit(stream).writeStream
       .foreachBatch { (batch: DataFrame, id: Long) => applyBatch(batch, root, id) }
 

@@ -3,12 +3,16 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.io.{Sinks, Versioned}
-import graft.ops.{Dedup, Manifest}
+import graft.ops.{Dedup, Manifest, StagedSwap}
 
 /** The INCREMENTAL corpus-maintenance cycle, end to end — the composed
   * form of the engine's daily-increment story: a new document batch
   * arrives, and every persisted artifact updates with work proportional
   * to the BATCH, never the archive.
+  *
+  * The engine's one incremental near-dup store: batches fold through
+  * [[ingest]], streams through [[attach]]/[[applyBatch]], erasure
+  * through [[forget]].
   *
   * Persisted state under one root:
   *  - `archive/`     the documents themselves (append-only parquet) with
@@ -17,7 +21,8 @@ import graft.ops.{Dedup, Manifest}
   *  - `index/`       the LSH band index (append-only: a batch's bands
   *                   land as new files — ~16 rows/doc of metadata; each
   *                   file's rows were df-capped with the table epoch
-  *                   current at its build, see the epoch note below);
+  *                   current at its build, see the epoch note below;
+  *                   [[forget]] swaps in a rewrite via [[StagedSwap]]);
   *  - `shingle_df/`  the shingle document-frequency table, epoched via
   *                   [[graft.io.Versioned]] DELTA versions: each batch
   *                   commits only the shingles it touched (rows ∝ batch
@@ -81,13 +86,20 @@ object IncrementalIngest {
     * The epoched artifacts commit as DELTA versions — rows written ∝
     * batch, not table — then checkpoint back to a full snapshot once the
     * chain reaches `checkpointEvery` (so reads fold at most that many
-    * changelogs and retention can GC). */
+    * changelogs and retention can GC).
+    *
+    * Both deltas derive from frames materialized before either commits,
+    * and the df delta commits first: a failed df write leaves every
+    * served artifact as it was, so a replay of the batch folds as if it
+    * never ran. A failure after the df commit is not covered — a replay
+    * merges the batch's df contribution again. */
   def ingest(spark: SparkSession, batch: DataFrame, root: String,
              maxDf: Long = Dedup.DefaultMaxDf,
              checkpointEvery: Int = 16): IngestResult = {
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     val p = StatePaths(root)
     val archive = spark.read.parquet(p.archive)
+    StagedSwap.recover(spark, p.index, IndexMarkers) // a crashed forget's index swap
     val index = spark.read.parquet(p.index)
     val dfTable = Versioned.read(spark, p.shingleDf)
     // resolve the label chain ONCE: with delta epochs this read folds up
@@ -104,12 +116,12 @@ object IncrementalIngest {
       .select("id1", "id2").localCheckpoint()
     // delta commits: only the rows this batch changed. Counts only grow
     // and labels only move/appear, so both changelogs are upsert-only.
-    val labelVersion = Versioned.writeDelta(
-      asUpserts(Dedup.updateClustersDelta(labels, pairs)),
-      p.labels, keys = Seq("doc_id"))
     Versioned.writeDelta(
       asUpserts(merged.join(batchDf.select("shingle"), Seq("shingle"), "left_semi")),
       p.shingleDf, keys = Seq("shingle"))
+    val labelVersion = Versioned.writeDelta(
+      asUpserts(Dedup.updateClustersDelta(labels, pairs)),
+      p.labels, keys = Seq("doc_id"))
     // append-only artifacts: batch bands + batch docs land as new files
     Sinks.parquet(Dedup.lshBandIndexCapped(batch, merged, maxDf),
       p.index, mode = "append")
@@ -121,6 +133,8 @@ object IncrementalIngest {
     }
     IngestResult(pairs.count(), labelVersion)
   }
+
+  private val IndexMarkers = Seq("_SUCCESS")
 
   private def asUpserts(changed: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -154,10 +168,12 @@ object IncrementalIngest {
     *    pairs never cross component boundaries. Lands as a delta:
     *    deletes for the forgotten, upserts/deletes for survivors whose
     *    label changed or vanished.
-    *  - `index/`: the forgotten docs' band rows are filtered out. The
-    *    index is ~16 rows of fixed-width metadata per doc; at archive
-    *    scale this rewrite would shard by band-file with its own stats
-    *    manifest — the documented next step, not a semantic change.
+    *  - `index/`: the forgotten docs' band rows are filtered out, and
+    *    the rewrite is swapped in through [[StagedSwap]] — a failed
+    *    rewrite leaves the pre-forget index serving. The index is ~16
+    *    rows of fixed-width metadata per doc; at archive scale this
+    *    rewrite would shard by band-file with its own stats manifest —
+    *    the documented next step, not a semantic change.
     *
     * Unknown ids are ignored (erasure is idempotent — re-running with
     * the same ids is a no-op), matching how erasure requests arrive in
@@ -217,11 +233,13 @@ object IncrementalIngest {
     if (!labelChanges.isEmpty)
       Versioned.writeDelta(labelChanges, p.labels, keys = Seq("doc_id"))
 
-    // 3. index: drop the forgotten docs' band rows (materialized before
-    // the overwrite — localCheckpoint breaks the read-own-output cycle)
-    val newIndex = spark.read.parquet(p.index)
-      .join(gone, Seq("doc_id"), "left_anti").localCheckpoint()
-    Sinks.parquet(newIndex, p.index)
+    // 3. index: drop the forgotten docs' band rows. The rewrite builds
+    // in staging (read live, write elsewhere: no read-own-output cycle)
+    // and swaps in whole; the swap first heals a crashed earlier one
+    StagedSwap.swap(spark, p.index, IndexMarkers) { staging =>
+      Sinks.parquet(
+        spark.read.parquet(p.index).join(gone, Seq("doc_id"), "left_anti"), staging)
+    }
 
     // 4. archive: rewrite ONLY the files whose stats envelope admits a
     // forgotten id (manifest pruning, the prunedScan planning pattern)
@@ -296,7 +314,7 @@ object IncrementalIngest {
              maxDf: Long = Dedup.DefaultMaxDf,
              checkpointEvery: Int = 16):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    // StreamGuard-admitted, like every attach funnel (see StreamingDedup)
+    // StreamGuard-admitted, like every attach funnel
     graft.streaming.StreamGuard.admit(stream).writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         applyBatch(batch, root, id, maxDf, checkpointEvery)

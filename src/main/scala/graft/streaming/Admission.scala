@@ -5,8 +5,8 @@ import graft.model.Tables
 
 /** Event-time ADMISSION GUARD for streaming ingest — the stage between an
   * at-least-once source and a non-idempotent foreachBatch fold
-  * ([[StreamingDedup]]/[[StreamingStats]]/the IncrementalIngest and
-  * VectorIndex attaches): WITHIN a run it deduplicates source
+  * ([[StreamingStats]]/the IncrementalIngest and VectorIndex
+  * attaches): WITHIN a run it deduplicates source
   * redeliveries by identity and bounds how far behind the event-time
   * frontier a row may arrive (reference has no streaming; this extends
   * the §2.10 north-star family).

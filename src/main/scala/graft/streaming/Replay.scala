@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Crash-replay protection shared by every foreachBatch state sink
-  * ([[StreamingDedup]]/[[StreamingStats]]/
-  * [[graft.pipeline.IncrementalIngest]]/[[graft.ops.VectorIndex]]):
+  * ([[StreamingStats]]/[[graft.pipeline.IncrementalIngest]]/
+  * [[graft.ops.VectorIndex]]/[[graft.ops.Scd]]):
   * on recovery Spark re-runs the last un-committed micro-batch, and an
   * epoch-append fold is not idempotent — so applied batch ids are
   * recorded as `_applied/batch=N` markers in the state root and a marked

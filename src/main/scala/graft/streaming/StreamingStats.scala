@@ -14,8 +14,9 @@ import graft.ops.Merge
   * value frequencies, and (opt-in) a bottom-k-by-hash uniform audit
   * sample — persisted epoch by epoch as parquet. The
   * "p95 doc length + unique sources + top tokens, updated nightly"
-  * dashboard, maintained without ever rescanning history (the batch
-  * sibling of [[StreamingDedup]]; reference has no streaming at all).
+  * dashboard, maintained without ever rescanning history (the
+  * aggregation sibling of [[graft.pipeline.IncrementalIngest]]'s
+  * near-dup fold; reference has no streaming at all).
   *
   * State layout: `stateDir` is a [[Versioned]] table, and epoch N is
   * its version N+1 (`<stateDir>/v=N+1/<family>/`, parquet, one dir per
@@ -24,7 +25,7 @@ import graft.ops.Merge
   * the rest), never data-sized, so a snapshot per epoch stays cheap at
   * any corpus scale.
   *
-  * Epoch discipline (same as [[StreamingDedup]]): epoch N+1's snapshot
+  * Epoch discipline: epoch N+1's snapshot
   * = merge(read-back epoch-N snapshot, batch partial), and every family
   * of it commits by ONE rename — a failed or crashed fold leaves only a
   * dot-prefixed staging dir, never a partial epoch, so the previous
@@ -85,27 +86,14 @@ object StreamingStats {
     Merge.bloomPositionsFast(col(cfg.freqCol).cast("string"),
       cfg.cmsWidth, cfg.cmsDepth)
 
-  // Epoch N of a streaming state table is its Versioned version N+1
-  // (init commits v=1 as epoch 0); both streaming sinks map through
-  // these two defs only.
-  private[streaming] def versionOf(epoch: Long): Long = epoch + 1
-  private[streaming] def epochOf(version: Long): Long = version - 1
-
-  /** Latest committed epoch of the [[Versioned]] table at `table`; -1
-    * before init. */
-  private[streaming] def latestEpochOf(table: String): Long =
-    Versioned.latestVersion(SparkSession.active, table).fold(-1L)(epochOf)
-
-  /** Drop all but the newest `keepLast` epochs of `table`; returns the
-    * dropped epochs. */
-  private[streaming] def retainEpochs(spark: SparkSession, table: String,
-                                      keepLast: Int): Seq[Long] = {
-    require(latestEpochOf(table) >= 0, s"state at $table not initialized")
-    Versioned.retain(spark, table, keepLast).map(epochOf)
-  }
+  // Epoch N is the state table's Versioned version N+1 (init commits
+  // v=1 as epoch 0); every epoch<->version mapping goes through these.
+  private def versionOf(epoch: Long): Long = epoch + 1
+  private def epochOf(version: Long): Long = version - 1
 
   /** Highest committed epoch; -1 before init. */
-  def latestEpoch(cfg: Config): Long = latestEpochOf(cfg.stateDir)
+  def latestEpoch(cfg: Config): Long =
+    Versioned.latestVersion(SparkSession.active, cfg.stateDir).fold(-1L)(epochOf)
 
   private def snapshot(spark: SparkSession, cfg: Config, family: String, epoch: Long) =
     Versioned.readPart(spark, cfg.stateDir, family, versionOf(epoch))
@@ -172,7 +160,7 @@ object StreamingStats {
 
   /** Attach the sink to a stream carrying the configured columns. */
   def attach(stream: DataFrame, cfg: Config): DataStreamWriter[org.apache.spark.sql.Row] =
-    // StreamGuard-admitted, like every attach funnel (see StreamingDedup)
+    // StreamGuard-admitted, like every attach funnel
     StreamGuard.admit(stream).writeStream
       .foreachBatch { (batch: DataFrame, id: Long) => applyBatch(batch, cfg, id) }
 
@@ -322,6 +310,8 @@ object StreamingStats {
     * the serving epoch is the newest and is always kept, and `_applied/`
     * replay markers guard batch ids, not epochs, and are untouched.
     * Returns the dropped epoch ids. */
-  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] =
-    retainEpochs(spark, cfg.stateDir, keepLast)
+  def retain(spark: SparkSession, cfg: Config, keepLast: Int): Seq[Long] = {
+    require(latestEpoch(cfg) >= 0, s"state at ${cfg.stateDir} not initialized")
+    Versioned.retain(spark, cfg.stateDir, keepLast).map(epochOf)
+  }
 }

@@ -127,4 +127,20 @@ class ManifestSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$mp.refresh-retired").exists())
     assert(Manifest.prunedScan(spark, dir, Seq(("y", 300.0, 300.0))).count() == 1)
   }
+
+  test("a failed manifest refresh after compaction leaves the old manifest serving; prunedScan == full scan + filter") {
+    val dir = clusteredDir()
+    val mp = Manifest.manifestPath(dir)
+    val old = spark.read.parquet(mp).collect().map(_.toSeq).toSet
+    val name = new org.apache.hadoop.fs.Path(mp).getName
+    graft.FailStateCommit.during(spark, name, s"$name.refresh-staging") {
+      intercept[Exception](graft.io.Sinks.compactParquet(spark, dir, targetBytes = 1L << 30))
+    }
+    assert(Manifest.read(spark, dir).collect().map(_.toSeq).toSet == old)
+    val pruned = Manifest.prunedScan(spark, dir, Seq(("x", 10.0, 13.0)))
+    val full = spark.read.parquet(dir)
+      .filter(col("x").cast("double").between(10.0, 13.0))
+    assert(pruned.orderBy("id").collect().map(_.toSeq).toSeq
+      == full.orderBy("id").collect().map(_.toSeq).toSeq)
+  }
 }

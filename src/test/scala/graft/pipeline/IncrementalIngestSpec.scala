@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{FailStateCommit, TestSpark}
 import graft.io.Versioned
 import graft.ops.Dedup
 
@@ -85,24 +85,11 @@ class IncrementalIngestSpec extends AnyFunSuite {
       (104L, "completely novel words here now", ts(11))).toDF("doc_id", "text", "ts")
 
     val root = Files.createTempDirectory("graft-incr-stream").toString
-    val src = new java.io.File(s"$root/src"); src.mkdirs()
-    Seq((b1, "b1", 1000000L), (b2, "b2", 2000000L), (b3, "b3", 3000000L)).foreach {
-      case (df, name, mtime) =>
-        val tmp = s"$root/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(src, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(mtime)
-    }
-
     val ps = IncrementalIngest.init(spark, archive, s"$root/state_stream")
     val guarded = graft.streaming.Admission.guard(
-      spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.toString),
+      IngestFixtures.replay(spark, s"$root/src", Seq(b1, b2, b3)),
       tsCol = "ts", delay = "2 hours", idCols = Seq("doc_id"))
-    val q = IncrementalIngest.attach(guarded, s"$root/state_stream").start()
+    val q = IncrementalIngest.attach(guarded, ps.root).start()
     try q.processAllAvailable() finally q.stop()
 
     val pb = IncrementalIngest.init(spark, archive, s"$root/state_batch")
@@ -262,5 +249,49 @@ class IncrementalIngestSpec extends AnyFunSuite {
     assert(manifest.select("file").collect().map(r => key(r.getString(0))).toSet ==
       archive.inputFiles.map(key).toSet)
     assert(manifest.agg(sum("n_rows")).head().getLong(0) == archive.count())
+  }
+
+  private def docs(rows: (Long, String)*) = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+  private val archive3 = docs((1L, "a b c d e f g h i j"), (3L, "z y x w v u t s r q"))
+  private val batch3a = docs((100L, "a b c d e f g h i j"), (102L, "m n o p q r s t u v"))
+  private val batch3b = docs((200L, "a b c d e f g h i j"), (201L, "m n o p q r s t u v"))
+
+  private def served(root: String) = IngestFixtures.served(spark, root)
+
+  test("a failed shingle-df write leaves every served artifact; the replayed batch id folds as if it never failed") {
+    val root = Files.createTempDirectory("graft-incr-fault").toString
+    val clean = s"$root/clean"
+    IncrementalIngest.init(spark, archive3, clean)
+    IncrementalIngest.applyBatch(batch3a, clean, batchId = 0)
+    IncrementalIngest.applyBatch(batch3b, clean, batchId = 1)
+
+    val state = s"$root/state"
+    IncrementalIngest.init(spark, archive3, state)
+    IncrementalIngest.applyBatch(batch3a, state, batchId = 0)
+    val before = served(state)
+    FailStateCommit.during(spark, "shingle_df") {
+      intercept[Exception](IncrementalIngest.applyBatch(batch3b, state, batchId = 1))
+    }
+    assert(served(state) == before)
+    IncrementalIngest.applyBatch(batch3b, state, batchId = 1)
+    assert(served(state) == served(clean))
+  }
+
+  test("a forget whose index rewrite fails leaves the pre-forget index serving; the next ingest runs") {
+    val root = Files.createTempDirectory("graft-forget-index").toString + "/state"
+    val p = IncrementalIngest.init(spark, archive3, root)
+    IncrementalIngest.ingest(spark, batch3a, root)
+    def index() = spark.read.parquet(p.index).collect().map(_.toSeq).toSet
+    val before = index()
+    FailStateCommit.during(spark, "index", "index.refresh-staging") {
+      intercept[Exception](IncrementalIngest.forget(spark, docs((100L, "")), root))
+    }
+    assert(index() == before)
+    IncrementalIngest.ingest(spark, batch3b, root)
+    assert(spark.read.parquet(p.archive).count() == 6)
+    assert(index().map(_.head) == Set[Any](1L, 3L, 100L, 102L, 200L, 201L))
   }
 }

@@ -214,12 +214,11 @@ class StreamGuardSpec extends AnyFunSuite {
   test("attach funnels are guarded: an unbounded-state stream is refused AT attach(), before start()") {
     val offender = streamEvents.groupBy("event_type").count()
       .selectExpr("event_type as doc_id", "cast(count as string) as text")
-    val cfg = StreamingDedup.Config(
-      Files.createTempDirectory("graft-streamguard-dd").toString)
+    val root = Files.createTempDirectory("graft-streamguard-dd").toString
     intercept[graft.engine.PlanGuard.PlanRejected](
-      StreamingDedup.attach(offender, cfg))
+      graft.pipeline.IncrementalIngest.attach(offender, root))
     intercept[graft.engine.PlanGuard.PlanRejected](
-      graft.ops.VectorIndex.attach(offender, cfg.stateDir))
+      graft.ops.VectorIndex.attach(offender, root))
   }
 
   test("registry audit: every registry stream shape admits") {

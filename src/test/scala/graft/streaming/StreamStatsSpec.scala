@@ -1,12 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.mapreduce.JobContext
-import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{FailStateCommit, TestSpark}
 import graft.model.Tables
 import graft.ops.Merge
 
@@ -377,7 +374,7 @@ class StreamStatsSpec extends AnyFunSuite {
     StreamingStats.init(spark, c, tinyArchive)
     StreamingStats.applyBatch(tinyB1, c, batchId = 0)
     val served = rowSet(StreamingStats.dashboard(spark, c))
-    FailStateCommit.during(spark) {
+    FailStateCommit.during(spark, "stats") {
       intercept[Exception](StreamingStats.applyBatch(tinyB2, c, batchId = 1))
     }
     assert(StreamingStats.latestEpoch(c) == 1L)
@@ -399,27 +396,5 @@ class StreamStatsSpec extends AnyFunSuite {
       (stateSnapshot(c), rowSet(StreamingStats.dashboard(spark, c)))
     }
     assert(run(s"file:$root/uri") == run(s"$root/plain"))
-  }
-}
-
-/** Commit protocol that fails `commitJob` for any write into a path with
-  * a `stats` or `shingle_df` segment — the streaming sinks' epoch-marking
-  * state writes — after its tasks have written their files. */
-class FailStateCommit(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
-    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
-  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
-    if (path.split('/').exists(s => s == "stats" || s == "shingle_df"))
-      throw new java.io.IOException(s"commit refused: $path")
-    else super.commitJob(jobContext, taskCommits)
-}
-
-object FailStateCommit {
-  private val Key = "spark.sql.sources.commitProtocolClass"
-
-  /** Run `body` with every state write's job commit failing. */
-  def during[T](spark: SparkSession)(body: => T): T = {
-    val before = spark.conf.getOption(Key)
-    spark.conf.set(Key, classOf[FailStateCommit].getName)
-    try body finally before.fold(spark.conf.unset(Key))(spark.conf.set(Key, _))
   }
 }
